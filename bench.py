@@ -1,48 +1,19 @@
-"""Benchmark harness: runs the headline queries (the FULL registry
-since round 4) at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]`` and prints TWO JSON lines — the full
-per-query record, then a short totals-only line that survives
+"""Benchmark harness: runs every registry query (``FQ.QUERIES``, in
+registry order) at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+fixtures) on ``local[$SPARK_GRAFT_CPUS]`` and prints TWO JSON lines —
+the full per-query record, then a short totals-only line that survives
 tail-truncating log capture (parse the LAST parseable line):
 
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
-     "cold_total": <sec>, "core_r2_total": <sec>, "core_r3_total": <sec>,
-     "calib_core_r2_ref": <sec>, "drift_factor": <x>,
-     "drift_normalized_total": <sec>,
-     "queries": {"v1_top_actors": <sec>, ...}, "sf": "<dir>"}
+     "cold_total": <sec>, "queries": {"v1_top_actors": <sec>, ...},
+     "sf": "<dir>"}
+    {"metric": "headline_total", "value": <sec>, "unit": "sec",
+     "cold_total": <sec>, "n_queries": <int>, "sf": "<dir>"}
 
 ``value`` sums per-query best-of-2 (steady state); ``cold_total`` sums
 every query's FIRST rep, which includes the one-time materialization of
 the session-shared builds (plans/doc_pairs, plans/graph_edges) paid by
 whichever query touches each build first.
-    {"metric": "headline_total", "value": <sec>, "unit": "sec",
-     "cold_total": <sec>, "core_r2_total": <sec>, "core_r3_total": <sec>,
-     "calib_core_r2_ref": <sec>, "drift_factor": <x>,
-     "drift_normalized_total": <sec>, "n_queries": <int>, "sf": "<dir>"}
-
-Both lines also embed the newest ``tools/bench_r*_local.json``
-multi-run record when present (VERDICT-r9 ask #6): ``local_record``,
-``local_merged_bests_total``, ``local_n_runs``, ``local_per_run_drift``,
-``local_per_run_value`` — so the driver-visible BENCH_r{N}.json carries
-the merged-bests total and the per-run drift story, not just this
-single run.
-
-``core_py_total`` (new in round 10) sums the seven frozen
-Arrow/Python-boundary queries (``CORE_PY``) — a second drift axis.
-When ``drift_factor`` and a run's raw total disagree, compare the two
-gauges: both slowing together (r10 backfill: core_r2 +44%, core_py
-+45% across six runs while the raw total moved +3%) means a
-CPU-contention mode hitting throughput-bound queries while the
-fixed-overhead-dominated majority is untouched — so drift-normalizing
-the TOTAL by the gauge over-corrects; core_py diverging from core_r2
-would instead point at scan/IO vs Python-worker modes.
-
-The calibration keys make box drift checkable without driver reruns:
-the frozen r2 core is code-untouched since round 2, so
-``drift_factor = core_r2_total / calib_core_r2_ref`` measures this
-box/run vs the pinned reference (round-5 driver record, rescaled in
-round 9 to the r8 flip-off session conf via the interleaved conf A/B —
-see CALIB_CORE_R2_REF), and ``drift_normalized_total`` is the headline
-in reference-box seconds.
 
 Each query is forced end-to-end with the noop sink (full materialization
 of every output row — no pruning shortcut a ``count()`` might allow).
@@ -52,7 +23,6 @@ numbers reflect steady-state throughput.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import sys
@@ -63,788 +33,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from movie_data_etl_pipeline_spark.plans import fixture_queries as FQ
 from movie_data_etl_pipeline_spark.session import get_spark
-
-HEADLINE = [
-    "v1_top_actors",
-    "v2_top_genres",
-    "v3_genre_ratings",
-    "v4_top_actors_by_rating",
-    "t5_top20",
-    "f1_explode",
-    "o6_dedup_last_wins",
-    "o7_top_n_per_group",
-    "o8_upsert",
-    "o9_insert_if_absent",
-    "tx_token_stats",
-    "tx_token_frequency",
-    "tx_quality_scores",
-    "dd_exact_dup_groups",
-    "dd_ngram_jaccard",
-    "dd_minhash_lsh",
-    "sim_knn_lsh",
-    "sim_knn_ivf",
-    "aj_asof_join",
-    "rj_range_join",
-    "st_tumbling",
-    "st_sessionize",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "sa_stratified_sample",
-    "sa_mixture_sample",
-    "sa_hash_split",
-    "tx_chunking",
-    "mm_features",
-    "dd_incremental",
-    "ap_exact_quantiles",
-    "px_clean_corpus",
-    "q6_revenue_delta",
-    "q14_promo_revenue",
-    "w4_trailing_7d",
-    "j8_full_outer_nation",
-    "tx_repetition",
-    "ag_stats_moments",
-    "q4_order_priority",
-    "q9_nation_profit",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q22_idle_customers",
-    "w5_value_windows",
-    "ts_gapfill",
-    "ev_funnel",
-    "ev_cohort_retention",
-    "ag_histogram",
-    "o10_scd2_history",
-    "q21_waiting_suppliers",
-    "tx_rare_tokens",
-    "sim_label_centroids",
-    "inc_rollup",
-    "g3_grouping_sets",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q11_value_concentration",
-    "q12_priority_shipping",
-    "q15_top_supplier",
-    "q16_supplier_diversity",
-    "q19_disjunctive_revenue",
-    "q20_concentrated_suppliers",
-    "tx_tfidf_topk",
-    "ev_transitions",
-    "f3_variant_json",
-    "q2_min_cost_supplier",
-    "dd_contamination",
-    "tx_pii_scrub",
-    "tx_span_dedup",
-    "qa_audit",
-    "ev_top_paths",
-    "tx_adaptive_quality",
-    "emb_int8_quantize",
-    "dd_minhash_incremental",
-    "qa_volume_anomaly",
-    "px_training_mix",
-    "ts_ewma",
-    "fn_try_surface",
-    "tx_vocab_coverage",
-    "qa_key_skew",
-    "ag_median_mode",
-    "emb_prefix_norm",
-    "px_source_budget",
-    "px_shard_manifest",
-    "qa_json_dlq",
-    "st_dedup",
-    "ix_global_rownum",
-    "ev_type_pmi",
-    "tx_unigram_logprob",
-    "ap_hll_rollup",
-    "sim_hard_negatives",
-    "ag_weighted_median",
-    "gr_pagerank",
-    "tx_source_divergence",
-    "ix_inverted_index",
-    "jx_salted_join",
-    "ly_compaction",
-    "ag_ols_brand",
-    "sim_tfidf_cosine",
-    "ev_attribution",
-    "ap_cms_counts",
-    "qa_replica_diff",
-    "tx_score_calibration",
-    "qa_join_explosion",
-    "ap_kmv_sources",
-    "ap_kmv_jaccard",
-    "inc_join_view",
-    "sa_weighted_sample",
-    "gr_triangles",
-    "ag_ab_test",
-    "qa_release_gate",
-    "tx_skipgram_pmi",
-    "tx_bpe_merges",
-    "ev_debounce",
-    "qa_fk_repair",
-    "ag_mutual_info",
-    "w6_sliding_distinct",
-    "qa_seasonal_anomaly",
-    "qa_entropy_profile",
-    "dd_canonical_pick",
-    "qa_winsorize",
-    "ts_rolling_corr",
-    "ag_abc_analysis",
-    "tx_threshold_sweep",
-    "tx_sentence_stats",
-    "o13_scd2_lookup",
-    "qa_benford",
-    "sa_systematic",
-    "qa_balance_check",
-    "ev_survival_km",
-    "dd_survivorship",
-    "ag_theil_sen",
-    "ag_trimmed_mean",
-    "dd_lsh_recall",
-    "qa_psi_drift",
-    "ev_rfm",
-    "ts_acf",
-    "ts_cusum",
-    "qa_chi2",
-    "tx_zipf_fit",
-    "gr_kcore",
-    "ev_markov_reach",
-    "ag_simpsons",
-    "qa_l_diversity",
-    "dd_containment",
-    "emb_pq_codebook",
-    "sim_kmeans_assign",
-    "st_late_audit",
-    "qa_ks_test",
-    "ag_gini",
-    "ts_weekday_index",
-    "gr_bipartite_project",
-    "sa_bootstrap_ci",
-    "ev_session_entropy",
-    "ts_mk_trend",
-    "ag_hhi",
-    "sa_kfold_assign",
-    "emb_cov_audit",
-    "w7_record_days",
-    "ts_decompose",
-    "ts_m4_downsample",
-    "ev_audience_overlap",
-    "ag_cohort_ltv",
-    "ly_zonemap",
-    "o14_upsert_evolve",
-    "fe_quantile_bins",
-    "fe_target_encode",
-    "fe_hashed_features",
-    "ev_step_latency",
-    "emb_pca_power",
-    "w8_pareto_front",
-    "sa_neyman_alloc",
-    "o15_partition_overwrite",
-    "ts_seasonal_outliers",
-    "ag_did",
-    "ag_raking",
-    "ix_trigram_search",
-    "ts_forecast_backtest",
-    "ev_growth_accounting",
-    "qa_freshness",
-    "mm_content_dedup",
-    "g4_time_rollup",
-    "w9_yoy_change",
-    "ev_streaks",
-    "sa_split_leakage",
-    "emb_centroid_drift",
-    "qa_key_gaps",
-    "tx_langid_confusion",
-    "ag_price_volume_mix",
-    "fe_woe_iv",
-    "o16_merge_conditional",
-    "px_interleave_order",
-    "tx_pack_fragmentation",
-    "ev_funnel_timebound",
-    "ag_median_polish",
-    "sim_cluster_purity",
-    "qa_table_profiles",
-    "ag_grouped_quantiles",
-    "qa_srm_check",
-    "ev_user_outliers",
-    "gr_assortativity",
-    "fn_generator_surface",
-    "fn_datetime_surface",
-    "ts_intervention_impact",
-    "qa_round_number_bias",
-    "ts_fano_factor",
-    "ev_hourly_profile",
-    "dd_cross_source_dups",
-    # -- round 4: full-registry coverage (the 55 entries previously
-    # outside the headline; test_registry_contract enforces
-    # set(HEADLINE) == set(QUERIES) from here on) --
-    "j6_anti_join",
-    "j7_semi_join",
-    "w2_lag_delta",
-    "w3_ntile_quartiles",
-    "g2_cube",
-    "src_paged_api",
-    "dd_minhash_portable",
-    "dd_simhash_portable",
-    "sim_knn_portable",
-    "dd_minhash_incr_portable",
-    "gr_label_prop",
-    "o12_apply_changes",
-    "ap_quantile_rollup",
-    "qa_k_anonymity",
-    "sa_temporal_split",
-    "dd_bloom_incremental",
-    "st_interval_join_left",
-    "tx_datacard",
-    "pit_topk_events",
-    "emb_random_projection",
-    "fp_token_pairs",
-    "qa_mad_outliers",
-    "tx_bigram_surprisal",
-    "st_enrich",
-    "p3_scalar_coercions",
-    "st_sliding",
-    "st_interval_join",
-    "j5_left_join_agg",
-    "w1_running_total",
-    "g1_rollup",
-    "pv_pivot_status",
-    "su_set_ops",
-    "o11_snapshot_diff",
-    "dd_dup_clusters",
-    "jx_fuzzy_join",
-    "fn_hof_surface",
-    "mm_asset_stats",
-    "mm_frame_sample",
-    "hh_heavy_hitters",
-    "ly_zorder",
-    "tx_pack_sequences",
-    "f2_json_flatten",
-    "a6_duplicate_report",
-    "o8_upsert_preserve",
-    "tx_lang_distribution",
-    "tx_language_id",
-    "tx_fingerprints",
-    "tx_token_counts",
-    "pv_unpivot_lineitem",
-    "sq_min_price_supplier",
-    "fn_scalar_surface",
-    "dd_simhash",
-    "sim_knn_bruteforce",
-    "sim_embedding_near_dup",
-    "ap_approx_stats",
-    # -- round 4 wave 23 --
-    "tx_winnowing",
-    "ev_pattern_match",
-    "gr_modularity",
-    "qa_dp_counts",
-    # -- round 4 wave 24 --
-    "ly_hilbert",
-    "ag_huber_irls",
-    "sim_matryoshka_recall",
-    # -- round 4 wave 25 --
-    "tx_perplexity",
-    "gr_link_prediction",
-    "ev_incident_overlap",
-    # -- round 4 wave 26 --
-    "gr_khop_reach",
-    "fn_map_surface",
-    "ts_esd_outliers",
-    # -- round 4 wave 27 --
-    "emb_kmeans_iterate",
-    "qa_fd_mining",
-    # -- round 4 wave 28 --
-    "ts_periodogram",
-    "ix_bitmap_and",
-    # -- round 4 wave 29 --
-    "su_set_ops_all",
-    # -- round 4 wave 30 --
-    "gr_conductance",
-    # -- round 4 wave 31 --
-    "emb_silhouette",
-    "ag_quantile_irls",
-    "pt_hierarchy_rollup",
-    # -- round 4 wave 32 --
-    "ev_journey_editdist",
-    # -- round 4 wave 33 --
-    "fe_oof_target_encode",
-    "sa_group_kfold_audit",
-    # -- round 4 wave 34 --
-    "ml_auc_mw",
-    "ml_gains_deciles",
-    "ml_gini_stump",
-    # -- round 4 wave 35 --
-    "ir_ndcg_mrr",
-    "gr_hits",
-    "gr_local_clustering",
-    # -- round 4 wave 36 --
-    "rc_item_item_cf",
-    "ag_corr_matrix",
-    "fn_string_surface",
-    # -- round 4 wave 37 --
-    "rc_assoc_rules",
-    "ml_calibration",
-    "fn_bitwise_surface",
-    "fn_bitagg_surface",
-    # -- round 4 wave 38 --
-    "gr_bfs_hops",
-    "ml_pr_curve",
-    "jx_bloom_semijoin",
-    "qa_uniqueness_profile",
-    # -- round 4 wave 39 --
-    "ev_batch_sessions",
-    "ev_rfm_segments",
-    "ag_cramers_v",
-    # -- round 4 wave 40 --
-    "fn_array_surface",
-    "sq_correlated_agg",
-    "w11_rank_surface",
-    # -- round 4 wave 41 --
-    "mm_band_near_dup",
-    "ev_trigram_paths",
-    "ag_kendall_tau",
-    # -- round 4 wave 42 --
-    "fn_json_surface",
-    "fn_conditional_surface",
-    # -- round 4 wave 43 --
-    "tx_filter_funnel",
-    "qa_dup_impact",
-    # -- round 4 wave 44 --
-    "ts_rolling_median",
-    "ag_spearman",
-    # -- round 4 wave 45 --
-    "ag_ols2_cramer",
-    # -- round 4 wave 46 --
-    "tx_rake_keywords",
-    # -- round 4 wave 47 --
-    "qa_scd2_integrity",
-    # -- round 4 wave 48 --
-    "ap_hll_setops",
-    # -- round 4 wave 49 --
-    "ag_cuped",
-    # -- round 4 wave 50 --
-    "ag_levene_bf",
-    # -- round 4 wave 51 --
-    "ag_granger_lite",
-    # -- round 4 wave 52 --
-    "px_curation_e2e",
-    # -- round 4 wave 53 --
-    "ts_changepoint_binseg",
-    "ev_concurrency_sweep",
-    # -- round 4 wave 54 --
-    "sq_lateral_topn",
-    "ag_negbin_fit",
-    # -- round 4 wave 55 --
-    "fn_url_surface",
-    "ts_mase_baselines",
-    # -- round 4 wave 56 --
-    "ag_capture_recapture",
-    "ev_session_gap_median",
-    # -- round 4 wave 57 --
-    "ag_cohens_kappa",
-    "ag_odds_ratio",
-    # -- round 4 wave 58 --
-    "ev_stickiness",
-    # -- round 4 wave 59 --
-    "ix_bm25_topk",
-]
-
-
-# The round-3-era headline (211 names), frozen verbatim from the
-# pre-round-4 tree (git 6ee0d52) for the same reason CORE_R2 is:
-# cross-round speed claims are only honest on a fixed workload.
-CORE_R3 = [
-    "v1_top_actors",
-    "v2_top_genres",
-    "v3_genre_ratings",
-    "v4_top_actors_by_rating",
-    "t5_top20",
-    "f1_explode",
-    "o6_dedup_last_wins",
-    "o7_top_n_per_group",
-    "o8_upsert",
-    "o9_insert_if_absent",
-    "tx_token_stats",
-    "tx_token_frequency",
-    "tx_quality_scores",
-    "dd_exact_dup_groups",
-    "dd_ngram_jaccard",
-    "dd_minhash_lsh",
-    "sim_knn_lsh",
-    "sim_knn_ivf",
-    "aj_asof_join",
-    "rj_range_join",
-    "st_tumbling",
-    "st_sessionize",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "sa_stratified_sample",
-    "sa_mixture_sample",
-    "sa_hash_split",
-    "tx_chunking",
-    "mm_features",
-    "dd_incremental",
-    "ap_exact_quantiles",
-    "px_clean_corpus",
-    "q6_revenue_delta",
-    "q14_promo_revenue",
-    "w4_trailing_7d",
-    "j8_full_outer_nation",
-    "tx_repetition",
-    "ag_stats_moments",
-    "q4_order_priority",
-    "q9_nation_profit",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q22_idle_customers",
-    "w5_value_windows",
-    "ts_gapfill",
-    "ev_funnel",
-    "ev_cohort_retention",
-    "ag_histogram",
-    "o10_scd2_history",
-    "q21_waiting_suppliers",
-    "tx_rare_tokens",
-    "sim_label_centroids",
-    "inc_rollup",
-    "g3_grouping_sets",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q11_value_concentration",
-    "q12_priority_shipping",
-    "q15_top_supplier",
-    "q16_supplier_diversity",
-    "q19_disjunctive_revenue",
-    "q20_concentrated_suppliers",
-    "tx_tfidf_topk",
-    "ev_transitions",
-    "f3_variant_json",
-    "q2_min_cost_supplier",
-    "dd_contamination",
-    "tx_pii_scrub",
-    "tx_span_dedup",
-    "qa_audit",
-    "ev_top_paths",
-    "tx_adaptive_quality",
-    "emb_int8_quantize",
-    "dd_minhash_incremental",
-    "qa_volume_anomaly",
-    "px_training_mix",
-    "ts_ewma",
-    "fn_try_surface",
-    "tx_vocab_coverage",
-    "qa_key_skew",
-    "ag_median_mode",
-    "emb_prefix_norm",
-    "px_source_budget",
-    "px_shard_manifest",
-    "qa_json_dlq",
-    "st_dedup",
-    "ix_global_rownum",
-    "ev_type_pmi",
-    "tx_unigram_logprob",
-    "ap_hll_rollup",
-    "sim_hard_negatives",
-    "ag_weighted_median",
-    "gr_pagerank",
-    "tx_source_divergence",
-    "ix_inverted_index",
-    "jx_salted_join",
-    "ly_compaction",
-    "ag_ols_brand",
-    "sim_tfidf_cosine",
-    "ev_attribution",
-    "ap_cms_counts",
-    "qa_replica_diff",
-    "tx_score_calibration",
-    "qa_join_explosion",
-    "ap_kmv_sources",
-    "ap_kmv_jaccard",
-    "inc_join_view",
-    "sa_weighted_sample",
-    "gr_triangles",
-    "ag_ab_test",
-    "qa_release_gate",
-    "tx_skipgram_pmi",
-    "tx_bpe_merges",
-    "ev_debounce",
-    "qa_fk_repair",
-    "ag_mutual_info",
-    "w6_sliding_distinct",
-    "qa_seasonal_anomaly",
-    "qa_entropy_profile",
-    "dd_canonical_pick",
-    "qa_winsorize",
-    "ts_rolling_corr",
-    "ag_abc_analysis",
-    "tx_threshold_sweep",
-    "tx_sentence_stats",
-    "o13_scd2_lookup",
-    "qa_benford",
-    "sa_systematic",
-    "qa_balance_check",
-    "ev_survival_km",
-    "dd_survivorship",
-    "ag_theil_sen",
-    "ag_trimmed_mean",
-    "dd_lsh_recall",
-    "qa_psi_drift",
-    "ev_rfm",
-    "ts_acf",
-    "ts_cusum",
-    "qa_chi2",
-    "tx_zipf_fit",
-    "gr_kcore",
-    "ev_markov_reach",
-    "ag_simpsons",
-    "qa_l_diversity",
-    "dd_containment",
-    "emb_pq_codebook",
-    "sim_kmeans_assign",
-    "st_late_audit",
-    "qa_ks_test",
-    "ag_gini",
-    "ts_weekday_index",
-    "gr_bipartite_project",
-    "sa_bootstrap_ci",
-    "ev_session_entropy",
-    "ts_mk_trend",
-    "ag_hhi",
-    "sa_kfold_assign",
-    "emb_cov_audit",
-    "w7_record_days",
-    "ts_decompose",
-    "ts_m4_downsample",
-    "ev_audience_overlap",
-    "ag_cohort_ltv",
-    "ly_zonemap",
-    "o14_upsert_evolve",
-    "fe_quantile_bins",
-    "fe_target_encode",
-    "fe_hashed_features",
-    "ev_step_latency",
-    "emb_pca_power",
-    "w8_pareto_front",
-    "sa_neyman_alloc",
-    "o15_partition_overwrite",
-    "ts_seasonal_outliers",
-    "ag_did",
-    "ag_raking",
-    "ix_trigram_search",
-    "ts_forecast_backtest",
-    "ev_growth_accounting",
-    "qa_freshness",
-    "mm_content_dedup",
-    "g4_time_rollup",
-    "w9_yoy_change",
-    "ev_streaks",
-    "sa_split_leakage",
-    "emb_centroid_drift",
-    "qa_key_gaps",
-    "tx_langid_confusion",
-    "ag_price_volume_mix",
-    "fe_woe_iv",
-    "o16_merge_conditional",
-    "px_interleave_order",
-    "tx_pack_fragmentation",
-    "ev_funnel_timebound",
-    "ag_median_polish",
-    "sim_cluster_purity",
-    "qa_table_profiles",
-    "ag_grouped_quantiles",
-    "qa_srm_check",
-    "ev_user_outliers",
-    "gr_assortativity",
-    "fn_generator_surface",
-    "fn_datetime_surface",
-    "ts_intervention_impact",
-    "qa_round_number_bias",
-    "ts_fano_factor",
-    "ev_hourly_profile",
-    "dd_cross_source_dups",
-]
-
-
-# The round-2-era headline, frozen verbatim from the pre-round-3 tree
-# (git 19827b2): the ONLY set on which cross-round speed claims are
-# honest. HEADLINE[:N] prefixes drift (entries were inserted mid-list
-# during round 3), so the core is pinned by name, not position.
-# Python-boundary gauge (frozen from round 10 on): the seven registry
-# queries whose executedPlan crosses an Arrow/Python boundary
-# (ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas / UDTF, per
-# the PLANS.md digests). A second drift axis for diagnosing the r10
-# anomaly class where drift_factor and a run's raw total disagree:
-# core_py tracking core_r2 (r10 backfill: +45% vs +44% across six
-# runs, raw total +3%) = CPU contention on throughput-bound queries
-# with the fixed-overhead-dominated majority untouched (gauge-based
-# normalization of the TOTAL over-corrects); core_py DIVERGING from
-# core_r2 = scan/IO vs Python-worker mode. No pinned reference yet:
-# meaningful within/across runs of one box session; pin a reference
-# once a driver BENCH record carries it (the CALIB_CORE_R2_REF
-# procedure).
-CORE_PY = [
-    "sim_knn_ivf",
-    "tx_chunking",
-    "mm_features",
-    "tx_sentence_stats",
-    "ag_trimmed_mean",
-    "hh_heavy_hitters",
-    "sim_embedding_near_dup",
-]
-
-CORE_R2 = [
-    "v1_top_actors",
-    "v2_top_genres",
-    "v3_genre_ratings",
-    "v4_top_actors_by_rating",
-    "t5_top20",
-    "f1_explode",
-    "o6_dedup_last_wins",
-    "o7_top_n_per_group",
-    "o8_upsert",
-    "o9_insert_if_absent",
-    "tx_token_stats",
-    "tx_token_frequency",
-    "tx_quality_scores",
-    "dd_exact_dup_groups",
-    "dd_ngram_jaccard",
-    "dd_minhash_lsh",
-    "sim_knn_lsh",
-    "sim_knn_ivf",
-    "aj_asof_join",
-    "rj_range_join",
-    "st_tumbling",
-    "st_sessionize",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "sa_stratified_sample",
-    "dd_incremental",
-    "ap_exact_quantiles",
-    "px_clean_corpus",
-    "q6_revenue_delta",
-    "q14_promo_revenue",
-    "w4_trailing_7d",
-    "j8_full_outer_nation",
-    "tx_repetition",
-    "ag_stats_moments",
-    "q4_order_priority",
-    "q9_nation_profit",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q22_idle_customers",
-    "w5_value_windows",
-    "ts_gapfill",
-    "ev_funnel",
-    "ev_cohort_retention",
-    "ag_histogram",
-    "o10_scd2_history",
-    "q21_waiting_suppliers",
-    "tx_rare_tokens",
-    "sim_label_centroids",
-    "inc_rollup",
-    "g3_grouping_sets",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q11_value_concentration",
-    "q12_priority_shipping",
-    "q15_top_supplier",
-    "q16_supplier_diversity",
-    "q19_disjunctive_revenue",
-    "q20_concentrated_suppliers",
-    "tx_tfidf_topk",
-    "ev_transitions",
-    "f3_variant_json",
-    "q2_min_cost_supplier",
-    "dd_contamination",
-    "tx_pii_scrub",
-    "tx_span_dedup",
-    "qa_audit",
-]
-
-
-# -------------------------------------------------------------- calibration
-# Machine-calibration (VERDICT-r5 ask #4, shared helper VERDICT-r6 ask
-# #7): the frozen r2 core is code-untouched since round 2, so its total
-# is a pure gauge of THIS BOX TODAY vs the pinned driver record below.
-# Any cross-run comparison of absolute seconds should divide by
-# drift_factor first; a query is only a real regression if it exceeds
-# ~1.5x its drift-normalized prior. (Box swings of 20-40% on identical
-# code are the measured norm — see SCALE.md r6 A/B.)
-# Round-9 re-pin (VERDICT-r8 ask #4): the r5 driver-record ref (48.081,
-# kept below for cross-round quoting) was measured under pre-r8 session
-# conf; the r8 engine-wide AQE flip-off makes the code-frozen core
-# ~2.5% faster, so drift_factor against the old ref carried a permanent
-# fast-bias. The re-pin scales the old ref by the conf effect measured
-# INTERLEAVED IN ONE SESSION (tools/ab_r8_flip.py over CORE_R2:
-# flip_on 34.17 s -> flip_off 33.30 s, COVERAGE.md r8 record) —
-# box-state-free, unlike re-measuring on whatever box mood today has:
-#   48.081 * (33.30 / 34.17) = 46.857
-# Comparisons across the r8/r9 boundary should quote both refs.
-CALIB_CORE_R2_REF_R5CONF = 48.081  # core_r2_total in the round-5 DRIVER record (BENCH_r05)
-CALIB_CORE_R2_REF = 46.857  # r5 ref rescaled to the r8 flip-off conf (see above)
-# calib_ref is only meaningful for the EXACT CORE_R2 membership it was
-# recorded against (ADVICE-r6): pin it so any change to the set forces
-# an explicit re-calibration instead of silently skewing every
-# drift-normalized number downstream.
-_CORE_R2_PIN = "62954eb98e95"
-
-
-def _core_r2_guard() -> None:
-    assert (
-        hashlib.sha256(",".join(sorted(CORE_R2)).encode()).hexdigest()[:12]
-        == _CORE_R2_PIN
-    ), "CORE_R2 membership changed — re-pin CALIB_CORE_R2_REF against a fresh driver record"
-
-
-def calibration(
-    core_r2_total: float, total: float | None = None, sf_dir: str | None = None
-) -> dict:
-    """The calibration keys every perf-record JSON should carry.
-
-    ``CALIB_CORE_R2_REF`` is pinned at **sf0.1** — at any other scale
-    factor the ratio is meaningless (a round-10 sf0.001 smoke read
-    drift 0.542), so when ``sf_dir`` is supplied and is not the
-    reference scale the record carries ``drift_valid: false`` and the
-    drift keys must not be compared across rounds."""
-    _core_r2_guard()
-    drift = round(core_r2_total / CALIB_CORE_R2_REF, 3)
-    out = {
-        "calib_core_r2_ref": CALIB_CORE_R2_REF,
-        "core_r2_total": core_r2_total,
-        "drift_factor": drift,
-    }
-    if sf_dir is not None:
-        out["drift_valid"] = sf_dir.rstrip("/").endswith("sf0.1")
-    if total is not None:
-        out["drift_normalized_total"] = round(total / drift, 1) if drift > 0 else None
-    return out
-
-
-def measure_drift(spark, sf_dir: str | None = None) -> dict:
-    """Time the frozen CORE_R2 set (same best-of-2 noop-sink
-    methodology as the bench main loop) and return the calibration
-    dict — the shared probe tools/scalebench.py and the A/B harnesses
-    embed so every perf JSON is drift-honest, not just BENCH_r{N}."""
-    sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    _core_r2_guard()
-    core = 0.0
-    for name in CORE_R2:
-        fn = FQ.QUERIES[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        core += best
-    return calibration(round(core, 3), sf_dir=sf_dir)
 
 
 def _warm_python_workers(spark) -> None:
@@ -867,36 +55,6 @@ def _warm_python_workers(spark) -> None:
     ).mode("overwrite").save()
 
 
-def _local_record_summary() -> dict:
-    """Summary of the newest tools/bench_r*_local.json merged-bests
-    record, embedded in the driver-visible output (VERDICT-r9 ask #6:
-    the per-run drift story and the merged-bests total used to live
-    only in the tools/ JSON — the judge should read the full drift
-    picture from BENCH_r{N}.json alone). Empty dict when no local
-    record exists (e.g. a fresh clone)."""
-    import glob
-    import re as _re
-
-    recs = glob.glob(str(Path(__file__).resolve().parent / "tools" / "bench_r*_local.json"))
-    if not recs:
-        return {}
-    newest = max(recs, key=lambda p: int(_re.search(r"_r(\d+)_", p).group(1)))
-    try:
-        rec = json.loads(Path(newest).read_text().strip().splitlines()[-1])
-    except (OSError, json.JSONDecodeError, IndexError):
-        return {}
-    out = {"local_record": Path(newest).name}
-    for src, dst in [
-        ("value", "local_merged_bests_total"),
-        ("n_runs", "local_n_runs"),
-        ("per_run_drift", "local_per_run_drift"),
-        ("per_run_value", "local_per_run_value"),
-    ]:
-        if src in rec:
-            out[dst] = rec[src]
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -907,8 +65,7 @@ def main() -> None:
 
     times: dict[str, float] = {}
     cold_total = 0.0
-    for name in HEADLINE:
-        fn = FQ.QUERIES[name]
+    for name, fn in FQ.QUERIES.items():
         # best of 2: single-shot numbers at this scale carry ±20%
         # scheduler/GC noise that swamps real plan differences; the min
         # is the standard steady-state throughput estimate
@@ -925,62 +82,17 @@ def main() -> None:
             spark.catalog.clearCache()
         times[name] = round(best, 3)
 
-    total = round(sum(times.values()), 3)
-    # cold_total sums every query's FIRST rep: unlike the best-of
-    # headline it INCLUDES the one-time materialization of the
-    # session-shared builds (plans/doc_pairs, plans/graph_edges) paid
-    # by whichever query touches each build first — the honest
-    # whole-session number next to the steady-state one.
-    cold_total = round(cold_total, 3)
-    # core totals are the ROUND-COMPARABLE numbers (headline_total
-    # grows every time an operator is added and says nothing about
-    # speed trends): core_rN_total sums exactly the round-N-era
-    # headline queries.
-    core = round(sum(times[n] for n in CORE_R2), 3)
-    core3 = round(sum(times[n] for n in CORE_R3), 3)
-    core_py = round(sum(times[n] for n in CORE_PY), 3)
-    # machine-calibration line — see the calibration() docstring above
-    calib = calibration(core, total, sf_dir)
-    calib.pop("core_r2_total")  # printed as its own key below
-    local = _local_record_summary()
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total",
-                "value": total,
-                "unit": "sec",
-                "cold_total": cold_total,
-                "core_r2_total": core,
-                "core_r3_total": core3,
-                "core_py_total": core_py,
-                **calib,
-                **local,
-                "queries": times,
-                "sf": sf_dir,
-            }
-        )
-    )
-    # The driver's artifact capture keeps only the TAIL of stdout, and
-    # the per-query dict above is ~6 KB — so repeat the totals in a
-    # short second line that survives truncation (BENCH_r03 lost its
-    # totals this way). Consumers should parse the LAST parseable line.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total",
-                "value": total,
-                "unit": "sec",
-                "cold_total": cold_total,
-                "core_r2_total": core,
-                "core_r3_total": core3,
-                "core_py_total": core_py,
-                **calib,
-                **local,
-                "n_queries": len(times),
-                "sf": sf_dir,
-            }
-        )
-    )
+    totals = {
+        "metric": "headline_total",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "cold_total": round(cold_total, 3),
+    }
+    print(json.dumps({**totals, "queries": times, "sf": sf_dir}))
+    # Log capture may keep only the TAIL of stdout, and the per-query
+    # dict above is ~6 KB — so repeat the totals in a short second line
+    # that survives truncation. Consumers parse the LAST parseable line.
+    print(json.dumps({**totals, "n_queries": len(times), "sf": sf_dir}))
 
 
 if __name__ == "__main__":

@@ -24,8 +24,9 @@ are sanctioned here:
   dimension-broadcast threshold; the bound is stated at each call site.
 
 Routing the hint through :func:`bounded_broadcast` (instead of a bare
-``F.broadcast``) lets ``tools/ab_r9_hints.py`` toggle ONLY these four
-restores in one interleaved session (monkeypatch to identity), and
+``F.broadcast``) lets an A/B toggle ONLY these four restores in one
+interleaved session (monkeypatch to identity; the r9 record is
+``tools/ab_r9_hints_sf01.json``), and
 gives the plan-gate/audit tooling one symbol to police.
 """
 

@@ -8217,29 +8217,9 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-# Insertion order is deliberate: the correctness driver checks the
-# FIRST 50 entries. Rounds 1-2 verified the original first-50 window
-# (all hash-green except the 8 events-timestamp casualties); round 3
-# front-loads (a) those 8 repaired queries so the fix gets fresh green
-# rows, then (b) 42 of the 58 entries that had never been inside the
-# window. The 16 never-checked entries that did not fit are parked
-# right behind the window (positions 50-65) for the next rotation;
-# the doubly-verified remainder sits at the tail, and every query
-# added later in round 3 appends after that. Every oracle pair below
-# was pre-verified locally via tools/crosscheck.py at sf0.01 AND
-# sf0.001 AND under local[5].
-#
-# NOTE: the dict literal below is the BUILD order; the driver-facing
-# insertion order is produced by `_rotated()` at the bottom of this
-# module (front 50 = `_R4_WINDOW`, then remaining never-driver-checked
-# entries in build order, then entries already green in a prior
-# CORRECTNESS_r*.json). ROUND-5 ROTATION: fold CORRECTNESS_r04's names
-# into `_DRIVER_CHECKED_R1_R3` (rename to _R1_R4), replace `_R4_WINDOW`
-# with the next 50 never-checked names (the `mid` section prints them
-# in order: python -c "from movie_data_etl_pipeline_spark.plans import
-# fixture_queries as f; print(list(f.QUERIES)[50:100])").
+# Registry order is build order: this literal, then each wave module's
+# entries appended below in turn.
 QUERIES: dict[str, QueryFn] = {
-    # -- window 0-7: repaired events-timestamp queries (red in r2) --
     "p3_scalar_coercions": p3_scalar_coercions,
     "o6_dedup_last_wins": o6_dedup_last_wins,
     "st_tumbling": st_tumbling,
@@ -8248,7 +8228,6 @@ QUERIES: dict[str, QueryFn] = {
     "st_interval_join": st_interval_join,
     "w4_trailing_7d": w4_trailing_7d,
     "aj_asof_join": aj_asof_join,
-    # -- window 8-49: first-ever correctness rows --
     "q1_pricing_summary": q1_pricing_summary,
     "q2_min_cost_supplier": q2_min_cost_supplier,
     "q3_shipping_priority": q3_shipping_priority,
@@ -8291,7 +8270,6 @@ QUERIES: dict[str, QueryFn] = {
     "tx_pii_scrub": tx_pii_scrub,
     "tx_pack_sequences": tx_pack_sequences,
     "qa_audit": qa_audit,
-    # -- 50-65: never-checked overflow, next rotation's window --
     "j6_anti_join": j6_anti_join,
     "j7_semi_join": j7_semi_join,
     "w2_lag_delta": w2_lag_delta,
@@ -8308,7 +8286,6 @@ QUERIES: dict[str, QueryFn] = {
     "mm_features": mm_features,
     "tx_chunking": tx_chunking,
     "src_paged_api": src_paged_api,
-    # -- 66+: hash-green in both r1 and r2 --
     "v1_top_actors": v1_top_actors,
     "v2_top_genres": v2_top_genres,
     "v3_genre_ratings": v3_genre_ratings,
@@ -8351,7 +8328,6 @@ QUERIES: dict[str, QueryFn] = {
     "rj_range_join": rj_range_join,
     "ap_exact_quantiles": ap_exact_quantiles,
     "ap_approx_stats": ap_approx_stats,
-    # appended post-r3-window (enter via a later rotation)
     "sa_mixture_sample": sa_mixture_sample,
     "sa_hash_split": sa_hash_split,
     "dd_bloom_incremental": dd_bloom_incremental,
@@ -8862,243 +8838,3 @@ from movie_data_etl_pipeline_spark.plans import wave59 as _wave59  # noqa: E402
 
 QUERIES.update(_wave59.QUERIES)
 ORACLES.update(_wave59.ORACLES)
-
-# ------------------------------------------------------------------ rotation
-# The round driver's correctness check covers only the FIRST 50
-# insertion-ordered entries of QUERIES, so window placement is the
-# mechanism by which the official record converges on the registry.
-# ROUND-9 ROTATION (this round): CORRECTNESS_r08 came back 50/50 green,
-# closing the union at 325/343 — the r9 window below takes (a) the SIX
-# in-round re-checks (plans rewritten in r9 itself: explicit
-# bounded-side broadcast pins — the four r8 flip-off restores plus the
-# two same-shape wins gr_conductance / gr_khop_reach, see
-# plans/_hints.py and tools/ab_r9_hints_sf01.json), then (b) the FINAL
-# 18 never-checked names, which closes the union at 343/343, then
-# (c) 26 re-attests of the SURVEY §2 reference-parity core whose green
-# rows date from r1–r4 (VERDICT-r8 ask #2: eight rounds of session-conf
-# and shared-build evolution sit between those rows and HEAD).
-# ROUND-10 ROTATION (this round): CORRECTNESS_r09 came back 50/50
-# green, closing the driver union at 343/343 — every registry entry
-# now has an official driver row. From here every window is PURE
-# RE-ATTESTATION (VERDICT-r9 ask #1): front-load any plans rewritten
-# in-round (_R10_RECHECKS), then fill with the 50 entries whose LATEST
-# driver row is oldest (round asc, registry order within a round —
-# tools/rotation_next.py computes this, counting rows-only records
-# with `err == 'no_oracle'` and a sane row count as checked). The r10
-# fill is 27 r2-latest rows + the 23 oldest r3-latest rows; one full
-# lap over the registry takes ~7 rounds at 50/round.
-# ROUND-11 ROTATION (this round): CORRECTNESS_r10 came back 45 green +
-# 5 rows-only (the five oracle-less approximate entries riding the
-# window cap) — all names were already in the union, so the fold only
-# refreshed the staleness map. VERDICT-r10 ask #1 front-loads the
-# EIGHT plans rewritten in round 10 AFTER the r10 window shipped
-# (commit 3e35bfc — they have no driver row attesting the rewritten
-# code) into _R11_RECHECKS; any plan rewritten in round 11 itself is
-# ALSO added there when it is rewritten (this is the final round — no
-# _R12 window will exist to catch it later). The fill is the next-42
-# stalest per `python tools/rotation_next.py` (the remaining 17
-# r3-latest rows + the oldest 21 r4 rows, registry order within a
-# round; the fill shrinks by one for each r11 rewrite added to the
-# re-checks). The rotation-comment counts below are MACHINE-DERIVED —
-# `tools/rotation_next.py --counts` emits the line and
-# tests/test_registry_contract.py asserts the comment contains it
-# verbatim (VERDICT-r9 ask #5).
-# window r11: 50 = 12 re-checks + 38 re-attests + 0 never-checked
-# Every entry is verified locally at sf0.001 AND sf0.01 via
-# tools/crosscheck.py AND under a VANILLA SparkSession
-# (tests/test_vanilla_session.py) regardless of window position.
-_CHECKED_THROUGH_R7 = frozenset({
-    # --- green driver rows first recorded in CORRECTNESS_r07 ---
-    # (the 13 re-checks of that window — gr_khop_reach, gr_kcore,
-    # gr_label_prop, gr_modularity, gr_conductance, rc_item_item_cf,
-    # rc_assoc_rules, dd_containment, ev_rfm_segments, ag_levene_bf,
-    # dd_minhash_lsh, dd_minhash_incremental, ag_cramers_v — already
-    # appear in the r1–r6 sections below)
-    "gr_link_prediction", "ts_esd_outliers", "sim_matryoshka_recall",
-    "ts_rolling_corr", "ag_abc_analysis", "tx_threshold_sweep",
-    "tx_sentence_stats", "sa_systematic", "qa_balance_check",
-    "ev_survival_km", "dd_survivorship", "ag_theil_sen",
-    "ag_trimmed_mean", "qa_psi_drift", "ev_rfm", "ts_cusum", "qa_chi2",
-    "tx_zipf_fit", "ev_markov_reach", "ag_simpsons", "qa_l_diversity",
-    "emb_pq_codebook", "sim_kmeans_assign", "st_late_audit",
-    "qa_ks_test", "ts_weekday_index", "gr_bipartite_project",
-    "sa_bootstrap_ci", "ev_session_entropy", "ts_mk_trend", "ag_hhi",
-    "sa_kfold_assign", "emb_cov_audit", "w7_record_days",
-    "ts_decompose", "ts_m4_downsample", "ev_audience_overlap",
-    # --- green driver rows first recorded in CORRECTNESS_r06 ---
-    "sim_tfidf_cosine", "dd_containment", "tx_winnowing",
-    "dd_minhash_incremental", "sa_mixture_sample", "dd_bloom_incremental",
-    "st_interval_join_left", "tx_datacard", "ev_top_paths",
-    "tx_adaptive_quality", "qa_volume_anomaly", "px_training_mix",
-    "fn_try_surface", "tx_vocab_coverage", "qa_key_skew", "ag_median_mode",
-    "emb_prefix_norm", "px_source_budget", "px_shard_manifest",
-    "qa_json_dlq", "ev_type_pmi", "tx_unigram_logprob",
-    "sim_hard_negatives", "tx_source_divergence", "pit_topk_events",
-    "emb_random_projection", "fp_token_pairs", "qa_mad_outliers",
-    "tx_bigram_surprisal", "st_enrich", "jx_salted_join",
-    "ly_compaction", "ag_ols_brand", "qa_replica_diff",
-    "tx_score_calibration", "qa_join_explosion", "inc_join_view",
-    "sa_weighted_sample", "ag_ab_test", "qa_release_gate",
-    "tx_skipgram_pmi", "tx_bpe_merges", "ev_debounce", "qa_fk_repair",
-    "ag_mutual_info", "w6_sliding_distinct", "qa_seasonal_anomaly",
-    "qa_entropy_profile", "dd_canonical_pick", "qa_winsorize",
-    # --- green driver rows first recorded in CORRECTNESS_r05 ---
-    "src_paged_api", "ml_gains_deciles", "ml_gini_stump", "gr_khop_reach",
-    "gr_hits", "gr_local_clustering", "gr_modularity", "gr_conductance",
-    "rc_item_item_cf", "ag_corr_matrix", "rc_assoc_rules", "ml_calibration",
-    "gr_bfs_hops", "ml_pr_curve", "jx_bloom_semijoin", "qa_uniqueness_profile",
-    "ev_batch_sessions", "ev_rfm_segments", "ag_cramers_v",
-    "sq_correlated_agg", "w11_rank_surface", "mm_band_near_dup",
-    "ev_trigram_paths", "ag_kendall_tau", "fn_json_surface",
-    "fn_conditional_surface", "tx_filter_funnel", "qa_dup_impact",
-    "ts_rolling_median", "ag_spearman", "ag_ols2_cramer", "tx_rake_keywords",
-    "qa_scd2_integrity", "ap_hll_setops", "ag_cuped", "ag_levene_bf",
-    "ag_granger_lite", "px_curation_e2e", "ts_changepoint_binseg",
-    "ev_concurrency_sweep", "sq_lateral_topn", "ag_negbin_fit",
-    "fn_url_surface", "ts_mase_baselines", "ag_capture_recapture",
-    "ev_session_gap_median", "ag_cohens_kappa", "ag_odds_ratio",
-    "ev_stickiness", "ix_bm25_topk",
-    # --- green driver rows first recorded in CORRECTNESS_r04 ---
-    "ag_gini", "ag_weighted_median", "ap_cms_counts", "ap_hll_rollup",
-    "ap_kmv_jaccard", "ap_kmv_sources", "ap_quantile_rollup",
-    "dd_lsh_recall", "dd_minhash_incr_portable", "dd_minhash_portable",
-    "dd_simhash_portable", "emb_int8_quantize", "emb_pca_power",
-    "ev_attribution", "ev_cohort_retention", "ev_transitions",
-    "f3_variant_json", "fe_quantile_bins", "fe_woe_iv", "g2_cube",
-    "gr_kcore", "gr_label_prop", "gr_pagerank", "gr_triangles",
-    "inc_rollup", "ix_global_rownum", "ix_inverted_index",
-    "j6_anti_join", "j7_semi_join", "mm_features", "o12_apply_changes",
-    "o13_scd2_lookup", "o15_partition_overwrite", "o16_merge_conditional",
-    "qa_benford", "qa_k_anonymity", "sa_hash_split", "sa_temporal_split",
-    "sim_knn_portable", "sim_label_centroids", "st_dedup", "ts_acf",
-    "ts_ewma", "tx_chunking", "tx_rare_tokens", "tx_tfidf_topk",
-    "w2_lag_delta", "w3_ntile_quartiles", "w5_value_windows",
-    # --- green driver rows from rounds 1-3 ---
-    "a6_duplicate_report", "ag_histogram", "ag_stats_moments", "aj_asof_join",
-    "ap_approx_stats", "ap_exact_quantiles", "dd_contamination",
-    "dd_dup_clusters", "dd_exact_dup_groups", "dd_incremental",
-    "dd_minhash_lsh", "dd_ngram_jaccard", "dd_simhash", "ev_funnel",
-    "f1_explode", "f2_json_flatten", "fn_hof_surface", "fn_scalar_surface",
-    "g1_rollup", "g3_grouping_sets", "hh_heavy_hitters", "j5_left_join_agg",
-    "j8_full_outer_nation", "jx_fuzzy_join", "ly_zorder", "mm_asset_stats",
-    "mm_frame_sample", "o10_scd2_history", "o11_snapshot_diff",
-    "o6_dedup_last_wins", "o7_top_n_per_group", "o8_upsert",
-    "o8_upsert_preserve", "o9_insert_if_absent", "p3_scalar_coercions",
-    "pv_pivot_status", "pv_unpivot_lineitem", "px_clean_corpus",
-    "q10_returned_items", "q11_value_concentration", "q12_priority_shipping",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_diversity", "q17_small_quantity_revenue",
-    "q18_large_orders", "q19_disjunctive_revenue", "q1_pricing_summary",
-    "q20_concentrated_suppliers", "q21_waiting_suppliers",
-    "q22_idle_customers", "q2_min_cost_supplier", "q3_shipping_priority",
-    "q4_order_priority", "q5_local_supplier_volume", "q6_revenue_delta",
-    "q7_nation_volume", "q8_market_share", "q9_nation_profit", "qa_audit",
-    "rj_range_join", "sa_stratified_sample", "sim_embedding_near_dup",
-    "sim_knn_bruteforce", "sim_knn_ivf", "sim_knn_lsh",
-    "sq_min_price_supplier", "st_interval_join", "st_sessionize",
-    "st_sliding", "st_tumbling", "su_set_ops", "t5_top20", "ts_gapfill",
-    "tx_fingerprints", "tx_lang_distribution", "tx_language_id",
-    "tx_pack_sequences", "tx_pii_scrub", "tx_quality_scores",
-    "tx_repetition", "tx_span_dedup", "tx_token_counts",
-    "tx_token_frequency", "tx_token_stats", "v1_top_actors",
-    "v2_top_genres", "v3_genre_ratings", "v4_top_actors_by_rating",
-    "w1_running_total", "w4_trailing_7d",
-})
-
-# Green driver rows first recorded in CORRECTNESS_r08 (the full r8
-# window, 50/50 green — the three r8 re-checks already appear in the
-# r1–r7 sections above).
-_CHECKED_THROUGH_R8 = _CHECKED_THROUGH_R7 | frozenset({
-    "ag_cohort_ltv", "ly_zonemap", "o14_upsert_evolve",
-    "fe_target_encode", "fe_hashed_features", "ev_step_latency",
-    "w8_pareto_front", "sa_neyman_alloc", "ts_seasonal_outliers",
-    "ag_did", "ag_raking", "ix_trigram_search", "ts_forecast_backtest",
-    "ev_growth_accounting", "qa_freshness", "mm_content_dedup",
-    "g4_time_rollup", "w9_yoy_change", "ev_streaks", "sa_split_leakage",
-    "emb_centroid_drift", "qa_key_gaps", "tx_langid_confusion",
-    "ag_price_volume_mix", "px_interleave_order",
-    "tx_pack_fragmentation", "ev_funnel_timebound", "ag_median_polish",
-    "sim_cluster_purity", "qa_table_profiles", "ag_grouped_quantiles",
-    "qa_srm_check", "ev_user_outliers", "gr_assortativity",
-    "fn_generator_surface", "fn_datetime_surface",
-    "ts_intervention_impact", "qa_round_number_bias", "ts_fano_factor",
-    "ev_hourly_profile", "dd_cross_source_dups", "ev_pattern_match",
-    "qa_dp_counts", "ly_hilbert", "ag_huber_irls", "tx_perplexity",
-    "ev_incident_overlap",
-})
-
-# Green driver rows first recorded in CORRECTNESS_r09: the final 18
-# never-checked entries (the union closes at 343/343 here; the six r9
-# re-checks and 26 parity-core re-attests already appear above).
-_DRIVER_CHECKED_R1_R9 = _CHECKED_THROUGH_R8 | frozenset({
-    "fn_map_surface", "emb_kmeans_iterate", "qa_fd_mining",
-    "ts_periodogram", "ix_bitmap_and", "su_set_ops_all",
-    "emb_silhouette", "ag_quantile_irls", "pt_hierarchy_rollup",
-    "ev_journey_editdist", "fe_oof_target_encode",
-    "sa_group_kfold_audit", "ml_auc_mw", "ir_ndcg_mrr",
-    "fn_string_surface", "fn_bitwise_surface", "fn_bitagg_surface",
-    "fn_array_surface",
-})
-
-# Already-checked queries whose plans were rewritten in-round after
-# their green driver row — re-windowed so the record attests HEAD (the
-# r7/r8/r9 discipline). The first eight are the round-10 rewrites
-# (commit 3e35bfc) whose driver re-attest the frozen r10 window missed
-# (VERDICT-r10 ask #1 — the r10 window shipped before the optimizer
-# ran); the rest are plans rewritten in round 11 itself, added as they
-# are rewritten so the post-round driver run attests HEAD.
-_R11_RECHECKS: list[str] = [
-    # --- round-10 rewrites (no driver row at the rewritten code yet) ---
-    "qa_replica_diff", "ev_rfm_segments", "gr_hits", "ev_rfm",
-    "tx_bpe_merges", "ag_theil_sen", "px_training_mix", "emb_pca_power",
-    # --- round-11 rewrites (ev_rfm / emb_pca_power already above) ---
-    "qa_release_gate", "emb_cov_audit", "ag_corr_matrix", "tx_perplexity",
-]
-
-# Voluntary RE-ATTESTS (plans UNCHANGED, old green rows refreshed at
-# HEAD): the second post-union staleness lap — the 42 registry entries
-# whose LATEST driver row is oldest after folding CORRECTNESS_r10,
-# computed by tools/rotation_next.py from CORRECTNESS_r01..r10 (the
-# remaining 17 r3-latest rows, then the oldest r4 rows, registry
-# order within a round; the tail shrinks as r11 rewrites join the
-# re-checks). The registry contract allows checked names in
-# the window only when declared in exactly one of _R11_RECHECKS /
-# _R11_REATTESTS.
-_R11_REATTESTS = [
-    # --- latest driver row: r3 (remaining 17) ---
-    "pv_pivot_status", "su_set_ops", "ts_gapfill", "ev_funnel",
-    "ag_histogram", "dd_dup_clusters", "dd_contamination",
-    "tx_span_dedup", "jx_fuzzy_join", "fn_hof_surface",
-    "mm_asset_stats", "mm_frame_sample", "hh_heavy_hitters",
-    "ly_zorder", "tx_pii_scrub", "tx_pack_sequences", "qa_audit",
-    # --- latest driver row: r4 (oldest 21) ---
-    "w2_lag_delta", "w3_ntile_quartiles", "w5_value_windows",
-    "g2_cube", "ev_cohort_retention", "ev_transitions",
-    "tx_rare_tokens", "sim_label_centroids", "inc_rollup",
-    "tx_tfidf_topk", "f3_variant_json", "mm_features", "tx_chunking",
-    "sa_hash_split", "emb_int8_quantize", "ts_ewma", "st_dedup",
-    "ix_global_rownum", "ap_hll_rollup", "ag_weighted_median",
-    "dd_minhash_portable",
-]
-
-# Round-11 driver window: the 8 overdue re-checks first, then the
-# staleness fill. Zero rows-only entries this lap (the five oracle-less
-# approximate queries re-attested in r10).
-_R11_WINDOW = [
-    *_R11_RECHECKS,
-    *_R11_REATTESTS,
-]
-
-
-def _rotated(registry: dict[str, QueryFn]) -> dict[str, QueryFn]:
-    front = [n for n in _R11_WINDOW if n in registry]
-    placed = set(front)
-    mid = [
-        n for n in registry
-        if n not in _DRIVER_CHECKED_R1_R9 and n not in placed
-    ]
-    tail = [n for n in registry if n in _DRIVER_CHECKED_R1_R9 and n not in placed]
-    return {n: registry[n] for n in [*front, *mid, *tail]}
-
-
-QUERIES = _rotated(QUERIES)

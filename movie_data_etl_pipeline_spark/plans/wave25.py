@@ -196,8 +196,8 @@ def gr_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     # pairs map-side with nested array transforms. Same pair multiset
     # as the self-join — but ONE shuffle of the posting relation (the
     # groupBy) instead of two join sides plus an ~18M-row join output
-    # feeding the aggregate. Round-6 interleaved A/B
-    # (tools/ab_linkpred.py, identical top-100 asserted): median 3.3 s
+    # feeding the aggregate. Round-6 interleaved A/B (identical
+    # top-100 asserted): median 3.3 s
     # vs 6.9-7.3 s (join form) at sf0.1 and 13.6 vs 16.0 at 10x; a
     # filter-before-collect variant (hub_ok join ahead of the
     # collect) planned a SortMergeJoin on the post-agg relation and

@@ -101,7 +101,7 @@ def gr_khop_reach(spark: SparkSession, sf: str) -> DataFrame:
         # node/dimension-grain bounds: frontier and visited carry ONE
         # row per graph node (7 int64 bitset words) — pin the per-round
         # broadcasts the r8 flip-off removed so the |E| edge relation
-        # is never shuffled (A/B'd interleaved: tools/ab_r9_hints).
+        # is never shuffled (A/B'd interleaved: tools/ab_r9_hints_sf01.json).
         # The visited|=frontier merge below stays a shuffle join: it is
         # FULL OUTER, which BroadcastHashJoin cannot build.
         expanded = (

@@ -159,7 +159,7 @@ def ev_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     The per-customer base is consumed by all three histogram
     pipelines AND the value joins, so it is eagerly truncated once —
     without it each consumer replays the orders scan + custkey
-    aggregation (interleaved A/B, tools/ab_r7.py: 2.79 -> 1.97 s
+    aggregation (interleaved A/B, tools/ab_r7_sf01.json: 2.79 -> 1.97 s
     median at sf0.1)."""
     o = load_table(spark, sf, "orders").select(
         "o_custkey", "o_orderdate", SC.cents("o_totalprice").alias("cents")

@@ -32,7 +32,7 @@ def ag_levene_bf(spark: SparkSession, sf: str) -> DataFrame:
     The two 5-row intermediates (med, g) are eagerly truncated: each
     is consumed twice (z-branch + final join, W-row + final join), and
     without truncation every consumer replays the full orders scan
-    (interleaved A/B, tools/ab_r7.py: 2.40 -> 1.41 s median at sf0.1);
+    (interleaved A/B, tools/ab_r7_sf01.json: 2.40 -> 1.41 s median at sf0.1);
     med is additionally broadcast into the deviation join."""
     o = load_table(spark, sf, "orders").select(
         F.col("o_orderpriority").alias("grp"),

@@ -249,7 +249,7 @@ def gr_bipartite_project(spark: SparkSession, sf: str) -> DataFrame:
     self-join sides consume it and Catalyst does not reuse the
     exchange across them (two full lineitem scans otherwise; A/B
     median 4.1 -> 3.4 s at sf0.1). An array-form rewrite measured 2.1x
-    SLOWER here (tools/ab_r7.py, SCALE.md) — the per-part degree is
+    SLOWER here (tools/ab_r7_sf01.json, SCALE.md) — the per-part degree is
     ~4, so pair fan-out is tiny and the self-join is the right plan.
     The join is PINNED to a shuffle hash join: both sides are the
     same fact-scale relation, but AQE sizes the flip-to-broadcast

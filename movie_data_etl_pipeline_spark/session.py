@@ -17,6 +17,37 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _dir_bytes(data_dir: str) -> int:
+    """Total size of the files under ``data_dir``; 0 when it is missing."""
+    total = 0
+    for root, _dirs, files in os.walk(data_dir):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+def _host_ram_bytes() -> int:
+    """Physical RAM from ``/proc/meminfo``; 0 where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as fh:
+            return int(fh.readline().split()[1]) * 1024
+    except (OSError, ValueError, IndexError):
+        return 0
+
+
+def _shuffle_partitions_for(data_bytes: int, cpus: int, scale: int = 1) -> int:
+    return max(cpus, min(4096, (data_bytes * scale) // (16 * 1024 * 1024)))
+
+
+def _driver_memory_for(data_bytes: int, scale: int = 1) -> str:
+    half_ram_gb = _host_ram_bytes() // (2 * 1024**3)
+    need_gb = -(-(data_bytes * scale * 12) // (1024**3))  # ceil
+    return f"{max(8, min(half_ram_gb, need_gb))}g"
+
+
 def data_scaled_shuffle_partitions(data_dir: str, cpus: int, scale: int = 1) -> int:
     """Self-sizing shuffle-partition count (guide §2.2/§5): derive the
     initial partition count from the INPUT VOLUME instead of pinning it
@@ -44,17 +75,7 @@ def data_scaled_shuffle_partitions(data_dir: str, cpus: int, scale: int = 1) -> 
     that will WRITE the amplified fixtures before querying them (the
     conf is fixed at session build, so the derivation must anticipate
     the post-amplify volume)."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    return max(cpus, min(4096, (total * scale) // (16 * 1024 * 1024)))
+    return _shuffle_partitions_for(_dir_bytes(data_dir), cpus, scale)
 
 
 def data_scaled_driver_memory(data_dir: str, cpus: int, scale: int = 1) -> str:
@@ -70,28 +91,36 @@ def data_scaled_driver_memory(data_dir: str, cpus: int, scale: int = 1) -> str:
     row/aggregate state plus ~1.5× execution headroom), floored at the
     8g every bench round has used — at sf0.1 the derivation lands
     exactly there, so the bench session conf is bit-identical to
-    previous rounds — and capped at half the machine's RAM. Explicit
-    ``SPARK_GRAFT_DRIVER_MEM`` still wins. On a real cluster executor
+    previous rounds — and otherwise capped at half the machine's RAM.
+    The floor wins over the cap: a 16 GB host reads half-RAM as 7g and
+    still gets 8g. Explicit ``SPARK_GRAFT_DRIVER_MEM`` still wins. On a real cluster executor
     memory is provisioned per node and this local-mode heuristic is
     moot (set executor/overhead sizes explicitly, guide §5)."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    try:
-        with open("/proc/meminfo") as fh:
-            mem_kb = int(fh.readline().split()[1])
-        half_ram_gb = max(8, mem_kb // (2 * 1024 * 1024))
-    except (OSError, ValueError, IndexError):
-        half_ram_gb = 8
-    need_gb = -(-(total * scale * 12) // (1024**3))  # ceil
-    return f"{max(8, min(half_ram_gb, need_gb))}g"
+    return _driver_memory_for(_dir_bytes(data_dir), scale)
+
+
+def resolve_sizing(
+    data_bytes: int,
+    cpus: int,
+    shuffle_partitions: int | None = None,
+) -> tuple[int, str]:
+    """``(shuffle partitions, driver heap)`` for a session serving
+    ``data_bytes`` of fixtures. An explicit ``shuffle_partitions``
+    wins, then the ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` knobs (production and amplified-scale
+    tooling may pin them), then the data-scaled derivation."""
+    if shuffle_partitions is None:
+        # The r10 interleaved 32-vs-96 A/B over a fixed 69-query subset
+        # measured 3×cores 11% SLOWER at sf0.1
+        # (tools/ab_r10_shuffle.json), so the derivation intentionally
+        # lands on = cores at bench volume and only grows with data.
+        knob = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        if knob is not None:
+            shuffle_partitions = int(knob)
+        else:
+            shuffle_partitions = _shuffle_partitions_for(data_bytes, cpus)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory_for(data_bytes)
+    return shuffle_partitions, driver_mem
 
 
 def get_spark(
@@ -113,21 +142,9 @@ def get_spark(
     resolved_dir = data_dir or os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    if shuffle_partitions is None:
-        # Priority: explicit env knob (kept from r10 — amplified-scale
-        # and production tooling may still pin it) > data-scaled
-        # derivation. The r10 interleaved 32-vs-96 A/B over the frozen
-        # CORE_R2 workload measured 3×cores 11% SLOWER at sf0.1
-        # (tools/ab_r10_shuffle.json), so the derivation intentionally
-        # lands on = cores at bench volume and only grows with data.
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env is not None:
-            shuffle_partitions = int(env)
-        else:
-            shuffle_partitions = data_scaled_shuffle_partitions(resolved_dir, cpus)
-    driver_mem = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM"
-    ) or data_scaled_driver_memory(resolved_dir, cpus)
+    shuffle_partitions, driver_mem = resolve_sizing(
+        _dir_bytes(resolved_dir), cpus, shuffle_partitions
+    )
     # default is local mode sized to the machine; on a cluster set
     # SPARK_GRAFT_MASTER (yarn / k8s://... / spark://...) — or submit
     # via spark-submit --master, which wins over any builder setting —

@@ -39,6 +39,7 @@ NESTED_LOOP_OK = {
     "dd_ngram_jaccard",  # length-bound ±1 bin join, bounded replication
     "tx_vocab_coverage",  # k-list × vocab-histogram prefix
     "tx_unigram_logprob",  # 1-row total ⨯ vocab pricing
+    "tx_perplexity",  # 1-row vocab-size ⨯ scored bigrams
     "tx_source_divergence",  # 1-row corpus-total ⨯ (source,tok) counts
     "fp_token_pairs",  # 1-row doc-count ⨯ frequent-pair lift rendering
     "ap_exact_quantiles",

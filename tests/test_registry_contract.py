@@ -1,64 +1,26 @@
 """Pure-Python invariants of the driver contract — cheap to run, and
 exactly the mistakes a fast-growing registry makes: an oracle keyed to
-a missing query, a bench entry for a renamed query, an oracle that is
-not a plain SELECT, a duplicate key silently shadowing an earlier
-entry."""
+a missing query, an oracle that is not a plain SELECT, a duplicate key
+silently shadowing an earlier entry, a query or oracle that changed
+while code only moved."""
 
 from __future__ import annotations
 
+import hashlib
 import re
 
-import bench
 from movie_data_etl_pipeline_spark.plans.fixture_queries import ORACLES, QUERIES
+
+
+# sha256 over the sorted query names, then the sorted (name, oracle SQL)
+# pairs. Reordering or moving entries between modules keeps it; adding,
+# renaming or dropping a query, or editing any oracle, changes it.
+REGISTRY_PIN = "cb2835a3c2744053df61f73de279d3eb67eb72314d359543f3467802598d5bcc"
 
 
 def test_every_oracle_has_a_query():
     missing = [k for k in ORACLES if k not in QUERIES]
     assert not missing, f"oracles without queries: {missing}"
-
-
-def test_bench_headline_covers_registry():
-    # since round 4 the headline IS the registry: a new query cannot
-    # hide from the bench, and a renamed query breaks loudly here
-    missing = [k for k in bench.HEADLINE if k not in QUERIES]
-    assert not missing, f"bench entries without queries: {missing}"
-    unbenched = [k for k in QUERIES if k not in set(bench.HEADLINE)]
-    assert not unbenched, f"registry entries outside the bench: {unbenched}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench entries"
-
-
-def test_core_r2_is_a_frozen_subset():
-    assert len(bench.CORE_R2) == 69
-    missing = [k for k in bench.CORE_R2 if k not in bench.HEADLINE]
-    assert not missing, f"core entries missing from headline: {missing}"
-
-
-def test_core_py_is_a_frozen_subset():
-    # the python-boundary drift gauge (frozen from round 10): the seven
-    # Arrow/Python-boundary queries per the PLANS.md digests
-    assert len(bench.CORE_PY) == 7
-    assert len(set(bench.CORE_PY)) == 7
-    missing = [k for k in bench.CORE_PY if k not in bench.HEADLINE]
-    assert not missing, f"core_py entries missing from headline: {missing}"
-
-
-def test_core_r3_is_a_frozen_subset():
-    assert len(bench.CORE_R3) == 211
-    assert len(set(bench.CORE_R3)) == 211
-    missing = [k for k in bench.CORE_R3 if k not in bench.HEADLINE]
-    assert not missing, f"core entries missing from headline: {missing}"
-    # CORE_R2 ⊂ CORE_R3: the round-3 headline contained the round-2 one
-    assert set(bench.CORE_R2) <= set(bench.CORE_R3)
-
-
-def test_driver_window_is_full():
-    # the correctness driver reads the first 50 insertion-ordered
-    # entries; a registry below 50 would silently shrink the window
-    assert len(QUERIES) >= 50
-    window = list(QUERIES)[:50]
-    no_oracle = [k for k in window if k not in ORACLES]
-    # rows-only entries are allowed but should be rare in the window
-    assert len(no_oracle) <= 5, f"window heavy on rows-only checks: {no_oracle}"
 
 
 def test_oracles_are_select_only():
@@ -93,73 +55,13 @@ def test_queries_callable_with_two_args():
     assert not bad, f"queries not (spark, sf_dir) callables: {bad}"
 
 
-def test_rotation_front50_is_never_checked_or_declared_recheck():
-    # the point of the rotation: the driver's 50-entry window contains
-    # only entries without a prior green driver row, PLUS the
-    # explicitly declared re-checks — queries whose plan was rewritten
-    # after their green row, re-windowed so the record attests HEAD
-    # (VERDICT-r6 ask #1). The checked frozenset is renamed each
-    # rotation (_R1_R5 -> _R1_R6 -> ...) — resolve it by prefix so
-    # this test survives rotations; the recheck list is resolved the
-    # same way (_R7_RECHECKS -> _R8_RECHECKS -> ..., may be absent).
-    from movie_data_etl_pipeline_spark.plans import fixture_queries as FQ
-
-    names = [n for n in dir(FQ) if n.startswith("_DRIVER_CHECKED")]
-    assert len(names) == 1, f"expected one _DRIVER_CHECKED_* set, got {names}"
-    checked = getattr(FQ, names[0])
-    recheck_names = [n for n in dir(FQ) if n.endswith("_RECHECKS")]
-    assert len(recheck_names) <= 1, f"expected at most one *_RECHECKS list: {recheck_names}"
-    rechecks = set(getattr(FQ, recheck_names[0])) if recheck_names else set()
-    assert rechecks <= checked, "a declared re-check has no prior green row"
-    # voluntary re-attests (plans unchanged, old green rows refreshed at
-    # HEAD — the post-union rotation mode, VERDICT-r8 ask #2) are also
-    # declared explicitly; anything checked in the window must be in
-    # exactly one of the two declared lists
-    reattest_names = [n for n in dir(FQ) if n.endswith("_REATTESTS")]
-    assert len(reattest_names) <= 1, f"expected at most one *_REATTESTS list: {reattest_names}"
-    reattests = set(getattr(FQ, reattest_names[0])) if reattest_names else set()
-    assert reattests <= checked, "a declared re-attest has no prior green row"
-    assert not (rechecks & reattests), "a name cannot be both re-check and re-attest"
-
-    front = list(QUERIES)[:50]
-    overlap = sorted(set(front) & checked - rechecks - reattests)
-    assert not overlap, f"undeclared already-checked names in the driver window: {overlap}"
-    assert rechecks <= set(front), "declared re-checks must be IN the window"
-    assert reattests <= set(front), "declared re-attests must be IN the window"
-    # and every checked name outside the window must be in the tail
-    # AFTER every never-checked name (never-checked drain first)
-    order = list(QUERIES)
-    parked = [n for n in order[50:] if n in checked]
-    never = [n for n in order[50:] if n not in checked]
-    if parked and never:
-        assert order.index(parked[0]) > order.index(never[-1]), (
-            "checked tail entries must come after all never-checked entries"
-        )
-
-
-def test_rotation_comment_counts_are_machine_derived():
-    """VERDICT-r9 ask #5: two rounds in a row a hand-maintained count in
-    the rotation comment went stale. The counts line is now emitted by
-    `tools/rotation_next.py --counts` from the LIVE window lists, and
-    this test asserts the rotation comment in fixture_queries.py
-    contains that exact line — a count can no longer drift silently."""
-    import pathlib
-    import sys
-
-    tools = pathlib.Path(__file__).resolve().parents[1] / "tools"
-    sys.path.insert(0, str(tools))
-    try:
-        from rotation_next import window_counts_line
-    finally:
-        sys.path.remove(str(tools))
-
-    src = pathlib.Path(
-        pathlib.Path(__file__).resolve().parents[1]
-        / "movie_data_etl_pipeline_spark/plans/fixture_queries.py"
-    ).read_text()
-    line = window_counts_line()
-    assert f"# {line}" in src, (
-        f"rotation comment lacks the machine-derived counts line "
-        f"'{line}' — regenerate it with `python tools/rotation_next.py "
-        "--counts` and paste verbatim"
+def test_registry_pin():
+    h = hashlib.sha256()
+    for name in sorted(QUERIES):
+        h.update(name.encode() + b"\n")
+    for name, sql in sorted(ORACLES.items()):
+        h.update(name.encode() + b"\0" + sql.encode() + b"\n")
+    assert (len(QUERIES), len(ORACLES)) == (343, 335)
+    assert h.hexdigest() == REGISTRY_PIN, (
+        "registry names or oracle SQL changed; re-pin only for an intended change"
     )

@@ -121,15 +121,7 @@ def main() -> None:
             results[name] = f"ERROR: {str(e).splitlines()[0][:300]}"
         spark.catalog.clearCache()
     errs = {k: v for k, v in results.items() if isinstance(v, str)}
-    # drift calibration (VERDICT-r6 ask #7) — the sweep's per-query
-    # seconds are diagnostic, but they get READ as perf evidence, so
-    # carry the same calibration keys as every other record.
-    import bench
-
-    calib = bench.measure_drift(spark)
-    line = json.dumps(
-        {"factor": factor, "n_errors": len(errs), **calib, "results": results}
-    )
+    line = json.dumps({"factor": factor, "n_errors": len(errs), "results": results})
     print(line)
     if out_json:
         Path(out_json).write_text(line + "\n")

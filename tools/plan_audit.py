@@ -1,4 +1,4 @@
-"""Generate PLANS.md: the formatted physical plan of every headline
+"""Generate PLANS.md: the formatted physical plan of every registry
 query at the bench scale factor, plus a per-query digest of the
 scale-relevant plan facts (scan columns read, filters pushed to
 parquet, join strategies, top-k vs global sort, Python boundary).
@@ -20,7 +20,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import HEADLINE
 from movie_data_etl_pipeline_spark import plancheck
 from movie_data_etl_pipeline_spark.plans import fixture_queries as FQ
 from movie_data_etl_pipeline_spark.session import get_spark
@@ -176,7 +175,7 @@ def broadcast_scan(sf_dir: str) -> None:
     spark = get_spark("broadcast_scan")
     report: dict[str, object] = {}
     n_cand = 0
-    for name in HEADLINE:
+    for name in FQ.QUERIES:
         plan = (
             FQ.QUERIES[name](spark, sf_dir)
             ._jdf.queryExecution()
@@ -263,12 +262,12 @@ def main() -> None:
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
-            for name in HEADLINE
+            for name in FQ.QUERIES
         }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.catalog.clearCache()
-    for name in HEADLINE:
+    for name in FQ.QUERIES:
         qe = FQ.QUERIES[name](spark, sf_dir)._jdf.queryExecution()
         plan = qe.explainString(mode)
         out.append(f"## {name}")
@@ -283,7 +282,7 @@ def main() -> None:
         out.append("```")
         out.append("")
     Path(__file__).resolve().parents[1].joinpath("PLANS.md").write_text("\n".join(out))
-    print(f"PLANS.md written ({len(HEADLINE)} queries)")
+    print(f"PLANS.md written ({len(FQ.QUERIES)} queries)")
 
 
 if __name__ == "__main__":

@@ -100,16 +100,14 @@ def main() -> None:
             if isinstance(obj.get("queries"), dict):
                 bench_times = obj["queries"]
 
-    window = set(list(QUERIES)[:50])
     lines = [
         BEGIN,
         "",
         f"## Query index ({len(QUERIES)} queries, {len(ORACLES)} with DuckDB oracles)",
         "",
-        "`driver` = latest round with a green CORRECTNESS row (w = in the",
-        "current round's 50-entry window); `oracle` hash = value-checked",
-        "against DuckDB, rows = rows-only; bench seconds from the latest",
-        "local sf0.1 run where provided.",
+        "`driver` = latest round with a green CORRECTNESS row; `oracle`",
+        "hash = value-checked against DuckDB, rows = rows-only; bench",
+        "seconds from the latest local sf0.1 run where provided.",
         "",
         "| query | family | oracle | driver | bench s |",
         "|---|---|---|---|---|",
@@ -117,8 +115,6 @@ def main() -> None:
     for name in QUERIES:
         oracle = "hash" if name in ORACLES else "rows"
         drv = f"r{rounds[name]}" if name in rounds else "—"
-        if name in window:
-            drv += " w"
         t = bench_times.get(name)
         ts = f"{t:.2f}" if isinstance(t, (int, float)) else "—"
         lines.append(f"| {name} | {family_of(name)} | {oracle} | {drv} | {ts} |")

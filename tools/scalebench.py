@@ -247,16 +247,8 @@ def main() -> None:
             return {"t1": a, "tn": b, "ratio": None}
         return {"t1": a, "tn": b, "ratio": round(b / max(a, 1e-9), 2)}
 
-    # drift calibration (VERDICT-r6 ask #7): time the frozen CORE_R2
-    # gauge in THIS session so the ratios/seconds in this record are
-    # comparable across runs/boxes — divide any absolute time by
-    # drift_factor before comparing to another record's.
-    import bench
-
-    calib = bench.measure_drift(spark, base_dir)
     result = {
         "factor": factor,
-        **calib,
         "queries": {q: cell(q) for q in (names or SCALE_QUERIES)},
     }
     line = json.dumps(result)
