@@ -41,12 +41,6 @@ def avg_money(total_cents: Column, n: Column) -> Column:
     return total_cents.cast("double") / n / F.lit(100.0)
 
 
-def avg_exact_int(total: Column, n: Column) -> Column:
-    """Deterministic mean of an integer measure (single well-defined
-    int→double division; no round step to disagree on)."""
-    return total.cast("double") / n
-
-
 def nullif_empty(col: Column | str) -> Column:
     """Empty-string → NULL (reference P3, ``/root/reference/02_etl.py:76``)."""
     return F.nullif(_c(col), F.lit(""))

@@ -47,15 +47,3 @@ def normalized(a: Column | str, nrm: Column | str) -> Column:
     recomputing ``dot/(|a|·|b|)`` (3 folds) on every candidate — the
     verify stage of LSH similarity is exactly such a pair hot path."""
     return F.transform(_c(a), lambda x: x.cast("double") / _c(nrm))
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -20,13 +20,42 @@ never by cross join, so candidate count scales with bucket collisions
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_data_etl_pipeline_spark.functions import portable_hash as ph
 from movie_data_etl_pipeline_spark.functions.text import shingles
 from movie_data_etl_pipeline_spark.sources.parquet import ensure_min_partitions
+
+
+class HashFamily(NamedTuple):
+    """The three hash expressions the near-dup operators depend on, plus
+    the SimHash width their codomain supports. Every hash-dependent
+    operator below takes one as ``family``; the plan shape is the same
+    for every family, only these expressions differ."""
+
+    value: Callable[[Column | str], Column]  # string -> int64
+    slot: Callable[[Column, Column], Column]  # (minhash slot, value) -> int64
+    band: Callable[[Column, Column], Column]  # (signature slice, band) -> bucket
+    simhash_bits: int
+
+
+# production: Spark's 64-bit xxHash, one JVM intrinsic per value, with
+# the slot / band id mixed in as a seed argument
+XXH = HashFamily(F.xxhash64, F.xxhash64, F.xxhash64, 64)
+
+# oracle-provable: engine-portable arithmetic (``functions.portable_hash``
+# — a polynomial string fold, LCG permutations and a slice fold, all mod
+# 2^31-1) that DuckDB reproduces value-for-value, so which pairs collide
+# can be hash-checked, not just counted. O(chars) arithmetic per value vs
+# one intrinsic: the verification family, not the 100 TB hot path. The
+# codomain is [0, 2^31-1), so SimHash uses 28 bits (4 x 7-bit chunks).
+PORTABLE = HashFamily(
+    ph.str_hash, ph.lcg_perm, lambda sl, b: ph.fold_longs(sl), 28
+)
 
 # ---------------------------------------------------------------------------
 # Exact / keyed dedup
@@ -80,23 +109,25 @@ def duplicate_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
 
 
 def _shingle_sets(
-    docs: DataFrame, id_col: str, text_col: str, n: int
+    docs: DataFrame, id_col: str, text_col: str, n: int, *, family: HashFamily = XXH
 ) -> DataFrame:
-    """(id, sh: distinct 64-bit-hashed shingle array, n_sh) per document.
+    """(id, sh: distinct hashed shingle array, n_sh) per document.
 
-    Shingles are hashed to int64 immediately: every downstream set
-    operation (prefix explode+join, ``array_intersect`` verify) then
-    runs on fixed-width longs instead of ~n-token strings — identical
-    Jaccard values (a 64-bit collision inside one document's ~10³
-    shingles has probability ~1e-13) at a fraction of the shuffle bytes
-    and comparison cost."""
+    Shingles are hashed to int64 immediately (``family.value``): every
+    downstream set operation (prefix explode+join, ``array_intersect``
+    verify) then runs on fixed-width longs instead of ~n-token strings —
+    identical Jaccard values (a 64-bit collision inside one document's
+    ~10³ shingles has probability ~1e-13) at a fraction of the shuffle
+    bytes and comparison cost."""
     return (
         ensure_min_partitions(docs.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select(
             "id",
             F.array_sort(
                 F.array_distinct(
-                    F.transform(shingles(text_col, n), lambda s: F.xxhash64(s))
+                    # lambda wrapper: F.transform inspects the callable's
+                    # signature and rejects xxhash64's *cols form
+                    F.transform(shingles(text_col, n), lambda s: family.value(s))
                 )
             ).alias("sh"),
         )
@@ -332,53 +363,29 @@ def containment_pairs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
+def _minhash_banded(
+    sh: DataFrame, num_hashes: int, bands: int, *, family: HashFamily = XXH
 ) -> DataFrame:
-    """Per-document MinHash signature (array of ``num_hashes`` min-values).
+    """(id, band, bucket) LSH index rows from a shingle-set relation.
+    This relation IS the thing a production pipeline persists as its
+    near-dup index.
 
-    Hash family: ``xxhash64(seed_i, shingle_hash)`` — Spark's 64-bit
-    xxHash with the per-function seed mixed in as the first argument.
-    Deterministic across runs/executors (no Python in the hot path;
-    whole-stage codegen applies).
-
-    Plan shape: **zero shuffles** — each signature slot is
-    ``array_min(transform(sh, h -> xxhash64(seed, h)))`` evaluated
-    per-document inside one projection. The naive alternative (explode
-    shingles × seeds, then a (doc, seed)-keyed min-aggregate) pushes
+    Signatures: slot ``i`` is ``array_min(transform(sh, h ->
+    family.slot(i, h)))``, evaluated per document inside one projection
+    — **zero shuffles**. The naive alternative (explode shingles ×
+    slots, then a (doc, slot)-keyed min-aggregate) pushes
     |shingles|·num_hashes rows through an exchange; this form does the
-    same multiplications with no exchange at all, which is the
-    difference between a map-only stage and a 100-billion-row shuffle
-    at corpus scale.
-    """
-    sh = _shingle_sets(docs, id_col, text_col, n)
-    return sh.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda seed: F.array_min(
-                F.transform(F.col("sh"), lambda s: F.xxhash64(seed, s))
-            ),
-        ).alias("signature"),
-    )
-
-
-def _minhash_banded(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) LSH index rows from a shingle-set relation:
-    zero-shuffle signatures (see ``minhash_signatures``), then each
-    band's signature slice hashes to one bucket id. This relation IS
-    the thing a production pipeline persists as its near-dup index."""
+    same work with no exchange at all. Deterministic across
+    runs/executors (no Python in the hot path; whole-stage codegen
+    applies). Each band's signature slice then hashes to one bucket id
+    via ``family.band``."""
     rows_per_band = num_hashes // bands
     sigs = sh.select(
         "id",
         F.transform(
             F.sequence(F.lit(0), F.lit(num_hashes - 1)),
             lambda seed: F.array_min(
-                F.transform(F.col("sh"), lambda s: F.xxhash64(seed, s))
+                F.transform(F.col("sh"), lambda s: family.slot(seed, s))
             ),
         ).alias("signature"),
     )
@@ -387,7 +394,7 @@ def _minhash_banded(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
         F.posexplode(
             F.transform(
                 F.array(*[F.lit(b) for b in range(bands)]),
-                lambda b: F.xxhash64(
+                lambda b: family.band(
                     F.slice("signature", b * rows_per_band + 1, rows_per_band), b
                 ),
             )
@@ -402,6 +409,7 @@ def _assert_banded_consistent(
     *,
     sh: DataFrame | None = None,
     num_hashes: int | None = None,
+    family: HashFamily = XXH,
 ) -> None:
     """Debug-path guard for the supplied-index INVARIANT documented on
     :func:`minhash_lsh_pairs` (VERDICT-r8 stretch ask): a mismatched
@@ -414,10 +422,10 @@ def _assert_banded_consistent(
     (a) band ids must be exactly ``0..bands-1`` with all ``bands``
     present; (b) when the caller's shingle relation and ``num_hashes``
     are supplied, the buckets of a tiny id sample are RECOMPUTED with
-    this call's parameters and anti-joined against the index — a
-    ``num_hashes`` mismatch (same band count, different per-band
-    hashes), stale shingle sets, or a foreign hash family all produce
-    differing buckets and are caught, not just band-count drift
+    this call's parameters and ``family`` and anti-joined against the
+    index — a ``num_hashes`` mismatch (same band count, different
+    per-band hashes), stale shingle sets, or a foreign hash family all
+    produce differing buckets and are caught, not just band-count drift
     (ADVICE-r9: the band-count check alone could not justify the
     'different banding parameters' claim)."""
     import os
@@ -444,9 +452,9 @@ def _assert_banded_consistent(
             # subset must reproduce rows present verbatim in the index
             # (for the incremental caller's union index, the batch
             # shingles are a valid subset witness)
-            expect = _minhash_banded(sh.limit(4), num_hashes, bands).select(
-                "id", "band", "bucket"
-            )
+            expect = _minhash_banded(
+                sh.limit(4), num_hashes, bands, family=family
+            ).select("id", "band", "bucket")
             drift = expect.join(
                 banded.select("id", "band", "bucket"),
                 on=["id", "band", "bucket"],
@@ -472,6 +480,8 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     sh: DataFrame | None = None,
     banded: DataFrame | None = None,
+    *,
+    family: HashFamily = XXH,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding: signature → ``bands``
     bands of ``num_hashes/bands`` rows each → bucket-join on (band,
@@ -484,12 +494,14 @@ def minhash_lsh_pairs(
     ``sh`` / ``banded`` optionally supply pre-built shingle-set /
     (id, band, bucket) index relations (e.g. the session-shared
     checkpointed builds in ``plans.doc_pairs``); supplied relations are
-    not re-persisted.
+    not re-persisted. With ``family=PORTABLE`` every hash value is
+    reproducible in DuckDB, so the oracle checks which pairs collide,
+    not just how many — same plan, provable bits.
 
     INVARIANT (caller's responsibility — not cheaply checkable in-plan):
     a supplied ``banded`` must have been built by ``_minhash_banded``
-    from the SAME shingle sets as ``sh`` with the SAME ``num_hashes``
-    and ``bands``. A mismatched index does not error — exact
+    from the SAME shingle sets as ``sh`` with the SAME ``num_hashes``,
+    ``bands`` and ``family``. A mismatched index does not error — exact
     verification still passes every surviving pair — it silently
     degrades RECALL (wrong buckets → missed candidates). The wiring
     used by the registry (the 64×16 checkpointed index in
@@ -498,10 +510,14 @@ def minhash_lsh_pairs(
     """
     # one persisted shingle-set relation feeds BOTH the signatures and
     # the exact verification — the corpus is tokenized exactly once
-    sh = sh if sh is not None else _shingle_sets(docs, id_col, text_col, n).persist()
+    if sh is None:
+        sh = _shingle_sets(docs, id_col, text_col, n, family=family).persist()
     if banded is not None:
-        _assert_banded_consistent(banded, bands, "banded", sh=sh, num_hashes=num_hashes)
-    banded = banded if banded is not None else _minhash_banded(sh, num_hashes, bands).persist()
+        _assert_banded_consistent(
+            banded, bands, "banded", sh=sh, num_hashes=num_hashes, family=family
+        )
+    else:
+        banded = _minhash_banded(sh, num_hashes, bands, family=family).persist()
     # both sides of the self-join read this — hash the corpus once
     a = banded.alias("a")
     b = banded.alias("b")
@@ -533,6 +549,8 @@ def incremental_minhash_pairs(
     sh_b: DataFrame | None = None,
     banded_b: DataFrame | None = None,
     banded_all: DataFrame | None = None,
+    *,
+    family: HashFamily = XXH,
 ) -> DataFrame:
     """Near-dup pairs that INVOLVE the arriving batch: batch×corpus and
     batch×batch, never corpus×corpus — the shape that keeps continuous
@@ -545,10 +563,10 @@ def incremental_minhash_pairs(
     production the corpus side of the join and the corpus shingle sets
     used for exact verification are precomputed tables
     (``_minhash_banded`` output is exactly that index relation); here
-    they are derived in-plan. Because the hash family is deterministic
-    (seeded xxhash64), the result equals ``minhash_lsh_pairs`` on
-    ``corpus ∪ batch`` restricted to pairs touching the batch — asserted
-    exactly in tests, no recall haircut.
+    they are derived in-plan. Because every hash family is
+    deterministic, the result equals ``minhash_lsh_pairs`` on ``corpus ∪
+    batch`` restricted to pairs touching the batch — asserted exactly in
+    tests, no recall haircut.
 
     Output: (a_id, b_id, jaccard) with a_id < b_id, exact Jaccard ≥
     threshold.
@@ -556,37 +574,37 @@ def incremental_minhash_pairs(
     INVARIANT (caller's responsibility): supplied ``banded_b`` /
     ``banded_all`` must come from ``_minhash_banded`` over the same
     shingle sets as ``sh_b`` / ``sh_c ∪ sh_b`` with this call's
-    ``num_hashes`` and ``bands``. A mismatched index silently degrades
-    recall (verification still exact) — see ``minhash_lsh_pairs``; the
-    registry's 64×16 wiring is equivalence-asserted in tests."""
+    ``num_hashes``, ``bands`` and ``family``. A mismatched index
+    silently degrades recall (verification still exact) — see
+    ``minhash_lsh_pairs``; the registry's 64×16 wiring is
+    equivalence-asserted in tests."""
     # both shingle relations feed banding AND exact verification —
     # persist so each side is tokenized once (in production the corpus
     # side is a precomputed table and never recomputed at all)
-    sh_c = sh_c if sh_c is not None else _shingle_sets(corpus, id_col, text_col, n).persist()
-    sh_b = sh_b if sh_b is not None else _shingle_sets(batch, id_col, text_col, n).persist()
+    if sh_c is None:
+        sh_c = _shingle_sets(corpus, id_col, text_col, n, family=family).persist()
+    if sh_b is None:
+        sh_b = _shingle_sets(batch, id_col, text_col, n, family=family).persist()
     # banded_b / banded_all optionally supply pre-built (id, band,
     # bucket) index relations (banding is per-document row-local, so
     # slicing a full-corpus index by id is value-identical to banding
-    # the slice — the portable twin's documented equivalence)
+    # the slice)
     if banded_b is not None:
         _assert_banded_consistent(
-            banded_b, bands, "banded_b", sh=sh_b, num_hashes=num_hashes
+            banded_b, bands, "banded_b", sh=sh_b, num_hashes=num_hashes, family=family
         )
+    else:
+        banded_b = _minhash_banded(sh_b, num_hashes, bands, family=family).persist()
     if banded_all is not None:
         # the batch shingles are a subset of the union index's inputs —
         # a valid recompute witness for the sample check
         _assert_banded_consistent(
-            banded_all, bands, "banded_all", sh=sh_b, num_hashes=num_hashes
+            banded_all, bands, "banded_all", sh=sh_b, num_hashes=num_hashes, family=family
         )
-    banded_b = (
-        banded_b
-        if banded_b is not None
-        else _minhash_banded(sh_b, num_hashes, bands).persist()
-    )
     all_banded = (
         banded_all
         if banded_all is not None
-        else _minhash_banded(sh_c, num_hashes, bands).unionByName(banded_b)
+        else _minhash_banded(sh_c, num_hashes, bands, family=family).unionByName(banded_b)
     )
     a = banded_b.alias("a")
     b = all_banded.alias("b")
@@ -613,8 +631,15 @@ def incremental_minhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64) -> DataFrame:
-    """64-bit SimHash per document from token hashes.
+def simhash(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    *,
+    family: HashFamily = XXH,
+) -> DataFrame:
+    """``family.simhash_bits``-bit SimHash per document from token hashes
+    (``family.value``).
 
     For each bit position, sum +1/-1 votes of every token's hash bit and
     take the sign. Expressed as: explode tokens → token hash → per-(doc,
@@ -625,9 +650,9 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
         .select("id", F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    bit_positions = F.array(*[F.lit(i) for i in range(bits)])
+    bit_positions = F.array(*[F.lit(i) for i in range(family.simhash_bits)])
     votes = (
-        toks.withColumn("h", F.xxhash64("tok"))
+        toks.withColumn("h", family.value("tok"))
         .select("id", "h", F.explode(bit_positions).alias("bit"))
         # column-valued shift counts need the SQL form (the pyspark
         # shiftright/shiftleft wrappers only take literal counts)
@@ -656,242 +681,19 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     chunks: int = 4,
+    *,
+    family: HashFamily = XXH,
 ) -> DataFrame:
     """Pairs with SimHash hamming distance ≤ ``max_hamming``.
 
-    Candidate generation by the pigeonhole trick: split the 64-bit hash
-    into ``chunks`` chunks; any pair within distance < chunks must agree
-    on ≥1 chunk → equality-join per chunk, then exact hamming verify via
-    ``bit_count(xor)``. Equality joins only — no cross join.
+    Candidate generation by the pigeonhole trick: split the
+    ``family.simhash_bits``-bit hash into ``chunks`` chunks; any pair
+    within distance < chunks must agree on ≥1 chunk → equality-join per
+    chunk, then exact hamming verify via ``bit_count(xor)``. Equality
+    joins only — no cross join.
     """
-    hashed = simhash(docs, id_col, text_col)
-    chunk_bits = 64 // chunks
-    mask = (1 << chunk_bits) - 1
-    chunked = hashed.select(
-        "id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", i * chunk_bits).bitwiseAND(F.lit(mask))
-                    for i in range(chunks)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Oracle-provable (engine-portable-hash) twins of the hash-dependent ops
-# ---------------------------------------------------------------------------
-
-
-def _portable_shingle_sets(
-    docs: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, sh, n_sh) like :func:`_shingle_sets`, but shingles hashed with
-    the engine-portable polynomial fold (``functions.portable_hash``)
-    instead of xxhash64 — every downstream value is then reproducible in
-    DuckDB SQL, so banding output can be hash-checked, not just counted.
-    O(chars) arithmetic per shingle vs one intrinsic: this is the
-    verification twin, not the 100 TB hot path."""
-    from movie_data_etl_pipeline_spark.functions import portable_hash as ph
-
-    return (
-        ensure_min_partitions(docs.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select(
-            "id",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(shingles(text_col, n), lambda s: ph.str_hash(s))
-                )
-            ).alias("sh"),
-        )
-        .withColumn("n_sh", F.size("sh"))
-        .filter(F.col("n_sh") > 0)
-    )
-
-
-def _portable_banded(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) LSH index rows via the portable hash family:
-    zero-shuffle signatures (LCG-permutation minima per slot), each
-    band's slice folded to one bucket id — the portable rendering of
-    :func:`_minhash_banded`."""
-    from movie_data_etl_pipeline_spark.functions import portable_hash as ph
-
-    rows_per_band = num_hashes // bands
-    sigs = sh.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("sh"), lambda x: ph.lcg_perm(i, x))
-            ),
-        ).alias("signature"),
-    )
-    return sigs.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.array(*[F.lit(b) for b in range(bands)]),
-                lambda b: ph.fold_longs(
-                    F.slice("signature", b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-
-
-def minhash_lsh_pairs_portable(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    sh: DataFrame | None = None,
-    banded: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`minhash_lsh_pairs` with every hash replaced by portable
-    arithmetic (LCG permutations over a polynomial shingle fold): the
-    exact same banding plan shape — zero-shuffle signatures, band-bucket
-    equality self-join, verify-on-candidates — but with output that a
-    DuckDB oracle reproduces value-for-value. Same plan, provable bits.
-    ``sh`` / ``banded`` optionally supply pre-built portable
-    shingle-set / (id, band, bucket) index relations.
-    """
-    sh = sh if sh is not None else _portable_shingle_sets(docs, id_col, text_col, n).persist()
-    banded = banded if banded is not None else _portable_banded(sh, num_hashes, bands).persist()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
-    return _verify_pairs(candidates, sh, threshold)
-
-
-def incremental_minhash_pairs_portable(
-    corpus: DataFrame,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    sh_c: DataFrame | None = None,
-    sh_b: DataFrame | None = None,
-    banded_b: DataFrame | None = None,
-    banded_all: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`incremental_minhash_pairs` over the portable hash family:
-    batch-buckets ⨝ all-buckets (work scales with the arriving batch,
-    never corpus×corpus), with hash values a DuckDB oracle reproduces —
-    so the INCREMENTAL indexing path gets value-checked evidence too,
-    not just the batch==full-recompute property test. ``banded_b`` /
-    ``banded_all`` optionally supply pre-built (id, band, bucket)
-    index relations (banding is per-document row-local, so slicing a
-    full-corpus index by id is value-identical to banding the slice)."""
-    sh_c = sh_c if sh_c is not None else _portable_shingle_sets(corpus, id_col, text_col, n).persist()
-    sh_b = sh_b if sh_b is not None else _portable_shingle_sets(batch, id_col, text_col, n).persist()
-    banded_b = banded_b if banded_b is not None else _portable_banded(sh_b, num_hashes, bands).persist()
-    all_banded = (
-        banded_all
-        if banded_all is not None
-        else _portable_banded(sh_c, num_hashes, bands).unionByName(banded_b)
-    )
-    a = banded_b.alias("a")
-    b = all_banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("a_id"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("b_id"),
-        )
-        .distinct()
-    )
-    return _verify_pairs(candidates, sh_c.unionByName(sh_b), threshold)
-
-
-def simhash_portable(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 28
-) -> DataFrame:
-    """:func:`simhash` with the portable token hash. ``bits`` ≤ 31
-    because the portable hash codomain is [0, 2^31-1); 28 keeps the
-    chunking below divisible into 4 × 7-bit chunks."""
-    from movie_data_etl_pipeline_spark.functions import portable_hash as ph
-
-    toks = (
-        ensure_min_partitions(docs.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
-    bit_positions = F.array(*[F.lit(i) for i in range(bits)])
-    votes = (
-        toks.withColumn("h", ph.str_hash("tok"))
-        .select("id", "h", F.explode(bit_positions).alias("bit"))
-        .withColumn(
-            "vote",
-            F.when(F.expr("shiftright(h, bit) & 1") == 1, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        .groupBy("id", "bit")
-        .agg(F.sum("vote").alias("v"))
-    )
-    return (
-        votes.withColumn(
-            "bitval",
-            F.when(F.col("v") > 0, F.expr("shiftleft(cast(1 as bigint), bit)")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        .groupBy("id")
-        .agg(F.sum("bitval").alias("simhash"))
-    )
-
-
-def simhash_near_dup_pairs_portable(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    chunks: int = 4,
-    bits: int = 28,
-) -> DataFrame:
-    """:func:`simhash_near_dup_pairs` over the portable 28-bit SimHash:
-    identical pigeonhole candidate generation (4 × 7-bit chunk equality
-    joins) and ``bit_count(xor)`` verify, value-checkable in DuckDB."""
-    hashed = simhash_portable(docs, id_col, text_col, bits)
-    chunk_bits = bits // chunks
+    hashed = simhash(docs, id_col, text_col, family=family)
+    chunk_bits = family.simhash_bits // chunks
     mask = (1 << chunk_bits) - 1
     chunked = hashed.select(
         "id",

@@ -141,16 +141,6 @@ def auc_from_cum(rel: DataFrame) -> DataFrame:
     )
 
 
-def auc_mann_whitney(df: DataFrame, score: Column, label: Column) -> DataFrame:
-    """AUC via the Mann-Whitney rank-sum identity, tie-aware and
-    integer-exact: over the ascending score histogram,
-    ``2U = Σ_s p_s · (2·NegBelow(s) + m_s)`` (each tie block contributes
-    half credit), ``AUC = 2U / (2·P·N)``. One fact aggregation, one
-    histogram prefix sum, one 1-row result — the only double is the
-    final division of exact int64s."""
-    return auc_from_cum(score_cum_relation(df, score, label))
-
-
 def gains_deciles(
     df: DataFrame, score: Column, label: Column, n_bins: int = 10
 ) -> DataFrame:

@@ -55,14 +55,6 @@ def hll_rollup(profile: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def hll_estimate_cells(profile: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Per-cell estimates straight off the profile (no merge) — the
-    sanity view of the stored sketches."""
-    return profile.select(
-        *keys, F.hll_sketch_estimate("sk").alias("n_distinct_est")
-    ).orderBy(*keys)
-
-
 # ---------------------------------------------------------------------------
 # Mergeable quantile sketch: fixed-bin integer histogram state
 # ---------------------------------------------------------------------------

@@ -6,8 +6,8 @@ of the ``documents`` table — ``dd_ngram_jaccard``, ``gr_triangles``,
 ``dd_canonical_pick``, ``dd_survivorship`` at threshold 0.8 (the last
 three ALSO each re-ran connected components over the same pairs). This
 module builds each (sf, threshold) pair relation, and the 0.8
-component labeling, ONCE per SparkSession (WeakKeyDictionary, same
-discipline as ``plans/graph_edges``) and eagerly localCheckpoints it,
+component labeling, ONCE per SparkSession (``session.per_session``,
+like ``plans/graph_edges``) and eagerly localCheckpoints it,
 so the shingle explode + inverted-index self-join — the expensive part
 of every consumer — is paid once per session.
 
@@ -32,67 +32,54 @@ the near-dup pair list (bounded by the prefix/positional filters in
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_etl_pipeline_spark.functions import portable_hash as ph
 from movie_data_etl_pipeline_spark.functions.text import shingles
 from movie_data_etl_pipeline_spark.operators import dedup
+from movie_data_etl_pipeline_spark.session import per_session
 from movie_data_etl_pipeline_spark.sources import load_table
 
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
-
-def _shingle_arrays(spark: SparkSession, sf: str, family: str) -> DataFrame:
+@per_session
+def _shingle_arrays(spark: SparkSession, sf: str, family: dedup.HashFamily) -> DataFrame:
     """(id, h) positional 3-shingle hash arrays for the whole
-    ``documents`` table, hashed with ``family`` ∈ {xxh, portable};
-    built and eagerly localCheckpointed once per (session, sf, family).
-    Documents shorter than 3 tokens (empty shingle array) are excluded,
-    matching every consumer's own guard."""
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "sharr", family)
-    if key not in per:
-        docs = load_table(spark, sf, "documents")
-        # lambda wrapper: F.transform inspects the callable's signature
-        # and rejects xxhash64's *cols (VAR_POSITIONAL) form
-        hash_fn = (
-            (lambda s: F.xxhash64(s)) if family == "xxh"
-            else (lambda s: ph.str_hash(s))
+    ``documents`` table, hashed with ``family.value``; built and eagerly
+    localCheckpointed once per (session, sf, family). Documents shorter
+    than 3 tokens (empty shingle array) are excluded, matching every
+    consumer's own guard."""
+    docs = load_table(spark, sf, "documents")
+    return (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            # lambda wrapper: F.transform inspects the callable's signature
+            # and rejects xxhash64's *cols (VAR_POSITIONAL) form
+            F.transform(shingles("text", 3), lambda s: family.value(s)).alias("h"),
         )
-        per[key] = (
-            docs.select(
-                F.col("doc_id").alias("id"),
-                F.transform(shingles("text", 3), hash_fn).alias("h"),
-            )
-            .filter(F.size("h") > 0)
-            .localCheckpoint(eager=True)
-        )
-    return per[key]
+        .filter(F.size("h") > 0)
+        .localCheckpoint(eager=True)
+    )
 
 
 def xxh_shingle_arrays(spark: SparkSession, sf: str) -> DataFrame:
     """Cached positional xxhash64 3-shingle arrays (id, h) — the base
     relation for the Jaccard/containment/TF-IDF/minhash-LSH family."""
-    return _shingle_arrays(spark, sf, "xxh")
+    return _shingle_arrays(spark, sf, dedup.XXH)
 
 
 def portable_shingle_arrays(spark: SparkSession, sf: str) -> DataFrame:
     """Cached positional engine-portable (``functions.portable_hash``)
     3-shingle arrays (id, h) — the base for ``tx_winnowing`` and the
-    oracle-provable minhash twins."""
-    return _shingle_arrays(spark, sf, "portable")
+    oracle-provable ``family=PORTABLE`` minhash queries."""
+    return _shingle_arrays(spark, sf, dedup.PORTABLE)
 
 
 def _sets_from_arrays(arr: DataFrame) -> DataFrame:
     """(id, sh: sorted distinct hashes, n_sh) — the row-local map from a
     positional array relation to the shingle-SET relation
-    ``operators.dedup._shingle_sets`` / ``_portable_shingle_sets``
-    produce; value-identical by construction (same tokenizer, same
-    hash, distinct+sort commute with the positional order)."""
+    ``operators.dedup._shingle_sets`` produces for the same family;
+    value-identical by construction (same tokenizer, same hash,
+    distinct+sort commute with the positional order)."""
     return (
         arr.select("id", F.array_sort(F.array_distinct("h")).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
@@ -100,14 +87,11 @@ def _sets_from_arrays(arr: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_sets_cached(spark: SparkSession, sf: str, family: str) -> DataFrame:
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "sets", family)
-    if key not in per:
-        per[key] = _sets_from_arrays(
-            _shingle_arrays(spark, sf, family)
-        ).localCheckpoint(eager=True)
-    return per[key]
+@per_session
+def _shingle_sets_cached(spark: SparkSession, sf: str, family: dedup.HashFamily) -> DataFrame:
+    return _sets_from_arrays(
+        _shingle_arrays(spark, sf, family)
+    ).localCheckpoint(eager=True)
 
 
 def xxh_shingle_sets(spark: SparkSession, sf: str) -> DataFrame:
@@ -119,16 +103,17 @@ def xxh_shingle_sets(spark: SparkSession, sf: str) -> DataFrame:
     caller-supplied relations (ADVICE-r6), so an un-materialized set
     form was re-derived per consumer — measured as a 3x regression on
     dd_minhash_lsh before this checkpoint existed."""
-    return _shingle_sets_cached(spark, sf, "xxh")
+    return _shingle_sets_cached(spark, sf, dedup.XXH)
 
 
 def portable_shingle_sets(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct-set form of :func:`portable_shingle_arrays`,
     checkpointed once per (session, sf) — same rationale as
     :func:`xxh_shingle_sets`."""
-    return _shingle_sets_cached(spark, sf, "portable")
+    return _shingle_sets_cached(spark, sf, dedup.PORTABLE)
 
 
+@per_session
 def portable_banded_index(spark: SparkSession, sf: str) -> DataFrame:
     """The (id, band, bucket) portable MinHash LSH index at the
     registry's standard 32 hashes / 8 bands, built once per (session,
@@ -138,15 +123,12 @@ def portable_banded_index(spark: SparkSession, sf: str) -> DataFrame:
     so its corpus/batch splits are id-filters over the full index —
     and ``dd_lsh_recall``); at 100 TB this IS the persisted near-dup
     index table a production pipeline maintains."""
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "banded32x8")
-    if key not in per:
-        per[key] = dedup._portable_banded(
-            portable_shingle_sets(spark, sf), 32, 8
-        ).localCheckpoint(eager=True)
-    return per[key]
+    return dedup._minhash_banded(
+        portable_shingle_sets(spark, sf), 32, 8, family=dedup.PORTABLE
+    ).localCheckpoint(eager=True)
 
 
+@per_session
 def xxh_banded_index(spark: SparkSession, sf: str) -> DataFrame:
     """The (id, band, bucket) xxhash64 MinHash LSH index at the
     registry's standard 64 hashes / 16 bands, built once per (session,
@@ -154,39 +136,29 @@ def xxh_banded_index(spark: SparkSession, sf: str) -> DataFrame:
     relation — ``dd_minhash_lsh`` (whole corpus) and
     ``dd_minhash_incremental`` (banding is per-document row-local, so
     its corpus/batch splits are id-filters over the full index — the
-    same slicing equivalence the portable twins already rely on)."""
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "banded64x16")
-    if key not in per:
-        per[key] = dedup._minhash_banded(
-            xxh_shingle_sets(spark, sf), 64, 16
-        ).localCheckpoint(eager=True)
-    return per[key]
+    same slicing equivalence the portable queries already rely on)."""
+    return dedup._minhash_banded(
+        xxh_shingle_sets(spark, sf), 64, 16
+    ).localCheckpoint(eager=True)
 
 
+@per_session
 def jaccard_pairs(spark: SparkSession, sf: str, threshold: float) -> DataFrame:
     """Exact 3-gram-shingle Jaccard near-dup pairs at ``threshold``,
     built and eagerly localCheckpointed once per (session, sf,
     threshold)."""
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "pairs", threshold)
-    if key not in per:
-        docs = load_table(spark, sf, "documents")
-        per[key] = dedup.ngram_jaccard_pairs(
-            docs, n=3, threshold=threshold,
-            sh=xxh_shingle_sets(spark, sf),
-        ).localCheckpoint(eager=True)
-    return per[key]
+    docs = load_table(spark, sf, "documents")
+    return dedup.ngram_jaccard_pairs(
+        docs, n=3, threshold=threshold,
+        sh=xxh_shingle_sets(spark, sf),
+    ).localCheckpoint(eager=True)
 
 
-def dup_components(spark: SparkSession, sf: str, threshold: float = 0.8) -> DataFrame:
+@per_session
+def dup_components(spark: SparkSession, sf: str, threshold: float) -> DataFrame:
     """Connected components (min-label propagation) over the cached
     pair relation — the duplicate-cluster labeling three dd_* queries
     consume."""
-    per = _CACHE.setdefault(spark, {})
-    key = (sf, "comp", threshold)
-    if key not in per:
-        per[key] = dedup.connected_components(
-            jaccard_pairs(spark, sf, threshold), "a_id", "b_id"
-        ).localCheckpoint(eager=True)
-    return per[key]
+    return dedup.connected_components(
+        jaccard_pairs(spark, sf, threshold), "a_id", "b_id"
+    ).localCheckpoint(eager=True)

@@ -234,7 +234,7 @@ def p3_scalar_coercions(spark: SparkSession, sf: str) -> DataFrame:
     events = load_table(spark, sf, "events")
     return events.select(
         "event_id",
-        F.nullif(F.col("event_type"), F.lit("")).alias("event_type_nn"),
+        SC.nullif_empty("event_type").alias("event_type_nn"),
         F.date_format("ts", _DATE).alias("event_date"),
         F.round("value", 2).alias("value_r"),
     )
@@ -688,16 +688,17 @@ def dd_minhash_portable(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf, "documents")
-    return dedup.minhash_lsh_pairs_portable(
+    return dedup.minhash_lsh_pairs(
         docs, n=3, num_hashes=32, bands=8, threshold=0.5,
         sh=portable_shingle_sets(spark, sf),
         banded=portable_banded_index(spark, sf),
+        family=dedup.PORTABLE,
     )
 
 
 # shared CTE prefix: portable-hashed shingle sets → 32-slot LCG minhash
 # signatures → 8 bands of 4 folded to bucket ids (mirrors
-# dedup._portable_shingle_sets + _portable_banded value-for-value)
+# dedup._shingle_sets + _minhash_banded with family=PORTABLE value-for-value)
 _MINHASH_PORT_CTES = rf"""
 WITH toks AS (
   SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS t FROM documents
@@ -1231,12 +1232,13 @@ def dd_minhash_incr_portable(spark: SparkSession, sf: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") % 10 == 0)
     sets = portable_shingle_sets(spark, sf)
     banded = portable_banded_index(spark, sf)
-    return dedup.incremental_minhash_pairs_portable(
-        corpus, batch,
+    return dedup.incremental_minhash_pairs(
+        corpus, batch, num_hashes=32, bands=8,
         sh_c=sets.where(F.col("id") % 10 != 0),
         sh_b=sets.where(F.col("id") % 10 == 0),
         banded_b=banded.where(F.col("id") % 10 == 0),
         banded_all=banded,
+        family=dedup.PORTABLE,
     )
 
 
@@ -1245,7 +1247,9 @@ def dd_simhash_portable(spark: SparkSession, sf: str) -> DataFrame:
     4×7-bit chunk-join candidates + ``bit_count(xor)`` verify as
     ``dd_simhash``, value-checked by the DuckDB oracle."""
     docs = load_table(spark, sf, "documents")
-    return dedup.simhash_near_dup_pairs_portable(docs, max_hamming=3, chunks=4, bits=28)
+    return dedup.simhash_near_dup_pairs(
+        docs, max_hamming=3, chunks=4, family=dedup.PORTABLE
+    )
 
 
 _DD_SIMHASH_PORT_SQL = rf"""

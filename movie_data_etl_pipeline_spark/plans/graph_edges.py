@@ -13,10 +13,10 @@ same discipline: the distinct (customer, part) co-PURCHASE pairs
 the 3-round label-propagation fixed point (``cotx_labels`` —
 gr_label_prop, gr_modularity, gr_conductance).
 
-The cache is a ``WeakKeyDictionary`` keyed by the live session: entries
-die with the session (no stale DataFrames bound to a stopped session),
-and a vanilla driver session works identically to the repo's own
-factory — no conf dependence. The materialization is
+The cache is ``session.per_session``, keyed by the live session:
+entries die with the session (no stale DataFrames bound to a stopped
+session), and a vanilla driver session works identically to the repo's
+own factory — no conf dependence. The materialization is
 ``localCheckpoint(eager=True)``, the repo-wide iterative-algorithm
 discipline: blocks are freed by the ContextCleaner when the cached
 DataFrame is dropped, and lineage is truncated so every consumer plans
@@ -29,37 +29,31 @@ reuses that one shuffle instead of re-running it per query.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_etl_pipeline_spark.session import per_session
 from movie_data_etl_pipeline_spark.sources import load_table
 
-_PAIRS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
 
-
+@per_session
 def cotx_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct (c, s) = (o_custkey, l_suppkey) co-transaction pairs,
     built and eagerly localCheckpointed once per (session, sf)."""
-    per = _PAIRS_CACHE.setdefault(spark, {})
-    if sf not in per:
-        o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-        li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-        per[sf] = (
-            o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .select(
-                F.col("o_custkey").cast("bigint").alias("c"),
-                F.col("l_suppkey").cast("bigint").alias("s"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+    o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(
+            F.col("o_custkey").cast("bigint").alias("c"),
+            F.col("l_suppkey").cast("bigint").alias("s"),
         )
-    return per[sf]
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
+@per_session
 def copurchase_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct (c, p) = (o_custkey, l_partkey) co-PURCHASE pairs —
     the customer↔part analogue of :func:`cotx_pairs`, built and
@@ -67,21 +61,17 @@ def copurchase_pairs(spark: SparkSession, sf: str) -> DataFrame:
     the co-purchase family: ``wave36._cf_baskets`` (item-item CF,
     association rules) and ``wave25.gr_link_prediction`` each started
     from this exact orders⋈lineitem scan + distinct."""
-    per = _PAIRS_CACHE.setdefault(spark, {})
-    key = f"{sf}::copurchase"
-    if key not in per:
-        o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-        li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-        per[key] = (
-            o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .select(
-                F.col("o_custkey").cast("bigint").alias("c"),
-                F.col("l_partkey").cast("bigint").alias("p"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+    o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(
+            F.col("o_custkey").cast("bigint").alias("c"),
+            F.col("l_partkey").cast("bigint").alias("p"),
         )
-    return per[key]
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def cotx_node_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -102,6 +92,7 @@ def cotx_edges(spark: SparkSession, sf: str) -> DataFrame:
     ).unionByName(p.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst")))
 
 
+@per_session
 def cotx_labels(spark: SparkSession, sf: str) -> DataFrame:
     """The 3-round deterministic label-propagation fixed point over the
     co-transaction graph (25% of customers seeded with their market
@@ -113,20 +104,15 @@ def cotx_labels(spark: SparkSession, sf: str) -> DataFrame:
     label asc) tie-break), so sharing the fixed point is pure
     amortization."""
     from movie_data_etl_pipeline_spark.operators import graph
-    from movie_data_etl_pipeline_spark.sources import load_table as _lt
 
-    per = _PAIRS_CACHE.setdefault(spark, {})
-    key = f"{sf}::labels"
-    if key not in per:
-        customer = _lt(spark, sf, "customer")
-        edges = cotx_node_pairs(spark, sf).select(
-            F.col("c_node").alias("src"), F.col("s_node").alias("dst")
-        )
-        seeds = customer.filter(F.col("c_custkey") % 4 == 0).select(
-            (F.col("c_custkey") * 2).alias("node"),
-            F.col("c_mktsegment").alias("label"),
-        )
-        per[key] = graph.label_propagation(edges, seeds, iters=3).localCheckpoint(
-            eager=True
-        )
-    return per[key]
+    customer = load_table(spark, sf, "customer")
+    edges = cotx_node_pairs(spark, sf).select(
+        F.col("c_node").alias("src"), F.col("s_node").alias("dst")
+    )
+    seeds = customer.filter(F.col("c_custkey") % 4 == 0).select(
+        (F.col("c_custkey") * 2).alias("node"),
+        F.col("c_mktsegment").alias("label"),
+    )
+    return graph.label_propagation(edges, seeds, iters=3).localCheckpoint(
+        eager=True
+    )

@@ -6,8 +6,8 @@ Five registry queries (``ml_auc_mw``, ``ml_gains_deciles``,
 SAME scored relation — score = order total in exact integer cents,
 label = order fulfilled — and each used to rebuild the scan → histogram
 → range-repartition → checkpoint chain. This module builds
-``ml_eval.score_cum_relation`` ONCE per (SparkSession, sf_dir) (same
-WeakKeyDictionary discipline as ``plans/graph_edges``) and every metric
+``ml_eval.score_cum_relation`` ONCE per (SparkSession, sf_dir)
+(``session.per_session``, like ``plans/graph_edges``) and every metric
 derives its view map-side: descending prefixes are
 ``tot − asc_prefix − own``, so no metric ever pays a second sort.
 
@@ -18,32 +18,23 @@ regardless of how many metrics read it.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_data_etl_pipeline_spark.functions import scalar as SC
 from movie_data_etl_pipeline_spark.operators import ml_eval
+from movie_data_etl_pipeline_spark.session import per_session
 from movie_data_etl_pipeline_spark.sources import load_table
 
-_CUM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
 
-
+@per_session
 def orders_score_cum(spark: SparkSession, sf: str) -> DataFrame:
     """The wave-34 scored relation (score = o_totalprice in exact cents,
     label = o_orderstatus = 'F') as a cached
     :func:`ml_eval.score_cum_relation`."""
-    per = _CUM_CACHE.setdefault(spark, {})
-    if sf not in per:
-        o = load_table(spark, sf, "orders")
-        scored = o.select(
-            SC.cents("o_totalprice").alias("score"),
-            (F.col("o_orderstatus") == "F").alias("label"),
-        )
-        per[sf] = ml_eval.score_cum_relation(
-            scored, F.col("score"), F.col("label")
-        )
-    return per[sf]
+    o = load_table(spark, sf, "orders")
+    scored = o.select(
+        SC.cents("o_totalprice").alias("score"),
+        (F.col("o_orderstatus") == "F").alias("label"),
+    )
+    return ml_eval.score_cum_relation(scored, F.col("score"), F.col("label"))

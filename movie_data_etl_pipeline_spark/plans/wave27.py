@@ -6,11 +6,10 @@ Determinism contract unchanged.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from movie_data_etl_pipeline_spark.session import per_session
 from movie_data_etl_pipeline_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -22,27 +21,18 @@ _KM_ROUNDS = 3
 _KM_DIM = 64
 
 
+@per_session
 def kmeans_state(spark: SparkSession, sf: str):
     """The shared Lloyd fixed point: returns (assign, cents) after
     ``_KM_ROUNDS`` unrolled rounds — `emb_kmeans_iterate` reports it,
     `wave31.emb_silhouette` scores it. See `emb_kmeans_iterate` for
     the determinism contract. Cached per (session, sf) — the rounds
     run once per session however many queries read the fixed point
-    (same WeakKeyDictionary discipline as ``plans/graph_edges``); the
-    final assignment is eagerly checkpointed so consumers plan against
-    flat scans, not the unrolled round lineage."""
-    per = _KM_CACHE.setdefault(spark, {})
-    if sf in per:
-        return per[sf]
+    (``session.per_session``); the final assignment is eagerly
+    checkpointed so consumers plan against flat scans, not the unrolled
+    round lineage."""
     assign, cents = _kmeans_state_uncached(spark, sf)
-    assign = assign.localCheckpoint(eager=True)
-    per[sf] = (assign, cents)
-    return per[sf]
-
-
-_KM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+    return assign.localCheckpoint(eager=True), cents
 
 
 def _kmeans_state_uncached(spark: SparkSession, sf: str):

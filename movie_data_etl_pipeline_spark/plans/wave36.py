@@ -10,11 +10,10 @@ engine built-ins value-for-value on a bounded key range.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from movie_data_etl_pipeline_spark.session import per_session
 from movie_data_etl_pipeline_spark.sources import load_table
 
 _CF_MAX_BASKET = 128
@@ -65,25 +64,17 @@ def _cf_baskets(spark: SparkSession, sf: str):
     return kept, item_n, pruned
 
 
-_CF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+@per_session
 def _cf_pair_counts(spark: SparkSession, sf: str):
     """The co-occurrence pair counts BOTH co-purchase queries start
     from: the per-customer self-join over the pruned basket relation,
     aggregated to ``(pa, pb, n_ab)`` and support-pruned. This is the
     quadratic stage — built once per (session, sf) and eagerly
-    localCheckpointed (same WeakKeyDictionary discipline as
-    ``plans/graph_edges``), so `rc_item_item_cf` and `rc_assoc_rules`
-    share one fan-out instead of running it twice. ``kept`` and
-    ``item_n`` are returned alongside for the denominators.
+    localCheckpointed (``session.per_session``), so `rc_item_item_cf`
+    and `rc_assoc_rules` share one fan-out instead of running it twice.
+    ``kept`` and ``item_n`` are returned alongside for the denominators.
 
     Returns ``(kept, item_n, pairs)``."""
-    per = _CF_CACHE.setdefault(spark, {})
-    if sf in per:
-        return per[sf]
     kept, item_n, pruned = _cf_baskets(spark, sf)
     a = pruned.select("c", F.col("p").alias("pa"))
     b = pruned.select("c", F.col("p").alias("pb"))
@@ -99,8 +90,7 @@ def _cf_pair_counts(spark: SparkSession, sf: str):
     # kept feeds rc_assoc_rules' n_baskets denominator — checkpoint it
     # too so the orders⋈lineitem scan+distinct is not re-run per call
     kept = kept.localCheckpoint(eager=True)
-    per[sf] = (kept, item_n, pairs)
-    return per[sf]
+    return kept, item_n, pairs
 
 
 def rc_item_item_cf(spark: SparkSession, sf: str) -> DataFrame:

@@ -12,9 +12,34 @@ transfer for the pandas-UDF slow path.
 
 from __future__ import annotations
 
+import functools
 import os
+import weakref
 
 from pyspark.sql import SparkSession
+
+
+def per_session(build):
+    """Memoize a shared build ``build(spark, *args)`` once per live
+    SparkSession and positional ``args``: the expensive relation (a
+    join + distinct, an iterative fixed point, an LSH index) runs once
+    per session however many registry queries read it. The cache is a
+    ``WeakKeyDictionary`` keyed on the session object, so entries die
+    with the session (no stale DataFrames bound to a stopped session),
+    a ``newSession()`` gets its own builds, and a vanilla driver
+    session works the same as this factory's — no conf dependence.
+    Arguments are positional only, so one logical build has one key;
+    materialization (``localCheckpoint``) stays the builder's choice."""
+    cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+    @functools.wraps(build)
+    def cached(spark: SparkSession, *args):
+        per = cache.setdefault(spark, {})
+        if args not in per:
+            per[args] = build(spark, *args)
+        return per[args]
+
+    return cached
 
 
 def _dir_bytes(data_dir: str) -> int:

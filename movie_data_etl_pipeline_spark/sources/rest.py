@@ -22,7 +22,6 @@ from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 try:  # pragma: no cover - network path, not exercised in tests
     import requests  # type: ignore[import-untyped]
@@ -108,11 +107,3 @@ def read_credits(spark: SparkSession, path: str) -> DataFrame:
 def read_genre_list(spark: SparkSession, path: str) -> DataFrame:
     """Landed ``/genre/movie/list`` document (``02_etl.py:31-35``)."""
     return spark.read.schema(TMDB_GENRE_LIST).json(path)
-
-
-def page_envelope_schema() -> T.StructType:
-    return TMDB_PAGE_ENVELOPE
-
-
-def credits_schema() -> T.StructType:
-    return TMDB_CREDITS

@@ -8,6 +8,7 @@ occurrence"), which bare ``dropDuplicates`` does not guarantee.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movie_data_etl_pipeline_spark.operators import dedup
@@ -88,42 +89,44 @@ def test_minhash_lsh_recalls_exact_pairs(spark):
     assert exact <= approx or approx == exact
 
 
-def test_supplied_banded_index_mismatch_fails_loudly(spark, monkeypatch):
+@pytest.mark.parametrize("family", ["XXH", "PORTABLE"])
+def test_supplied_banded_index_mismatch_fails_loudly(spark, monkeypatch, family):
     """The documented caller INVARIANT on minhash_lsh_pairs (supplied
     index must match this call's banding parameters) gets a debug-path
     runtime guard (VERDICT-r8 stretch ask): under
     SPARK_GRAFT_DEBUG_INVARIANTS=1 a mismatched index raises instead of
-    silently losing recall."""
-    import pytest as _pytest
-
+    silently losing recall — for every hash family."""
+    fam = getattr(dedup, family)
     docs = _docs(spark)
-    sh = dedup._shingle_sets(docs, "doc_id", "text", 3)
-    wrong = dedup._minhash_banded(sh, 64, 8)  # built at 8 bands
+    sh = dedup._shingle_sets(docs, "doc_id", "text", 3, family=fam)
+    wrong = dedup._minhash_banded(sh, 64, 8, family=fam)  # built at 8 bands
     monkeypatch.setenv("SPARK_GRAFT_DEBUG_INVARIANTS", "1")
-    with _pytest.raises(ValueError, match="different banding parameters"):
-        dedup.minhash_lsh_pairs(docs, n=3, num_hashes=64, bands=16, sh=sh, banded=wrong)
+    with pytest.raises(ValueError, match="different banding parameters"):
+        dedup.minhash_lsh_pairs(
+            docs, n=3, num_hashes=64, bands=16, sh=sh, banded=wrong, family=fam
+        )
     # ADVICE-r9: SAME band count but different num_hashes produces
     # different per-band bucket hashes — the band-count check alone
     # cannot see it; the recomputed-sample check must
-    wrong_nh = dedup._minhash_banded(sh, 32, 16)  # built at 32 hashes
-    with _pytest.raises(ValueError, match="different banding parameters"):
+    wrong_nh = dedup._minhash_banded(sh, 32, 16, family=fam)  # built at 32 hashes
+    with pytest.raises(ValueError, match="different banding parameters"):
         dedup.minhash_lsh_pairs(
-            docs, n=3, num_hashes=64, bands=16, sh=sh, banded=wrong_nh
+            docs, n=3, num_hashes=64, bands=16, sh=sh, banded=wrong_nh, family=fam
         )
     # shape violations fail even without the debug flag
     monkeypatch.delenv("SPARK_GRAFT_DEBUG_INVARIANTS")
-    with _pytest.raises(ValueError, match="lacks column"):
+    with pytest.raises(ValueError, match="lacks column"):
         dedup.minhash_lsh_pairs(
             docs, n=3, num_hashes=64, bands=16, sh=sh,
-            banded=wrong.withColumnRenamed("bucket", "hash"),
+            banded=wrong.withColumnRenamed("bucket", "hash"), family=fam,
         )
     # a CORRECT supplied index passes the guard under the flag
     monkeypatch.setenv("SPARK_GRAFT_DEBUG_INVARIANTS", "1")
-    right = dedup._minhash_banded(sh, 64, 16)
+    right = dedup._minhash_banded(sh, 64, 16, family=fam)
     got = {
         (r["a_id"], r["b_id"])
         for r in dedup.minhash_lsh_pairs(
-            docs, n=3, num_hashes=64, bands=16, sh=sh, banded=right
+            docs, n=3, num_hashes=64, bands=16, sh=sh, banded=right, family=fam
         ).collect()
     }
     assert got == {(1, 2)}

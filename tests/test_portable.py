@@ -92,7 +92,9 @@ def test_minhash_portable_subset_of_exact_jaccard(spark, sf_dir):
         (r["a_id"], r["b_id"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
     }
-    lsh = dedup.minhash_lsh_pairs_portable(docs, n=3, num_hashes=32, bands=8).collect()
+    lsh = dedup.minhash_lsh_pairs(
+        docs, n=3, num_hashes=32, bands=8, family=dedup.PORTABLE
+    ).collect()
     assert len(lsh) > 0
     for r in lsh:
         assert (r["a_id"], r["b_id"]) in exact

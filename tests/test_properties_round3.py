@@ -133,7 +133,7 @@ def test_source_divergence_tv_matches_fractions(spark, rows):
 def test_portable_minhash_signature_matches_python(spark, words):
     text = " ".join(words)
     df = spark.createDataFrame([(1, text)], "doc_id LONG, text STRING")
-    sh = dedup._portable_shingle_sets(df, "doc_id", "text", 3).collect()
+    sh = dedup._shingle_sets(df, "doc_id", "text", 3, family=dedup.PORTABLE).collect()
     toks = text.split()
     shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
 
@@ -150,8 +150,9 @@ def test_portable_minhash_signature_matches_python(spark, words):
     assert sh[0]["sh"] == want
     # signature slots = LCG minima
     sig_rows = (
-        dedup._portable_banded(
-            dedup._portable_shingle_sets(df, "doc_id", "text", 3), num_hashes=8, bands=2
+        dedup._minhash_banded(
+            dedup._shingle_sets(df, "doc_id", "text", 3, family=dedup.PORTABLE),
+            num_hashes=8, bands=2, family=dedup.PORTABLE,
         )
         .collect()
     )

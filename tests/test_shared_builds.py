@@ -6,7 +6,7 @@
   expensive build runs once per session);
 - a different SparkSession object (``newSession()`` shares the
   SparkContext but is a distinct session) → a fresh build, no
-  cross-session bleed (the WeakKeyDictionary keys on the live session
+  cross-session bleed (``session.per_session`` keys on the live session
   object, which is what makes the caches vanilla-driver-safe);
 - and the fresh build's VALUES match the cached one's — the cache is
   an amortization, never a semantic dependency.
@@ -55,10 +55,18 @@ def test_shared_build_cache_contract(spark, sf_dir, name, build):
     assert _rows(fresh) == _rows(first), f"{name}: rebuild changed values"
 
 
+def test_shared_build_cache_keys_on_args(spark, sf_dir):
+    """Arguments after the session are part of the cache key: two
+    thresholds are two builds, not one."""
+    assert doc_pairs.jaccard_pairs(spark, sf_dir, 0.5) is not doc_pairs.jaccard_pairs(
+        spark, sf_dir, 0.8
+    )
+
+
 def test_shingle_set_derivations_match_operator_forms(spark, sf_dir):
     """The row-local set derivations over the cached positional arrays
     must be value-identical to the operator-level derivations they
-    replace (``dedup._shingle_sets`` / ``_portable_shingle_sets``) —
+    replace (``dedup._shingle_sets`` with ``family=XXH`` / ``PORTABLE``) —
     the cache is an amortization, never a semantic fork."""
     from movie_data_etl_pipeline_spark.operators import dedup
     from movie_data_etl_pipeline_spark.sources import load_table
@@ -68,7 +76,7 @@ def test_shingle_set_derivations_match_operator_forms(spark, sf_dir):
         dedup._shingle_sets(docs, "doc_id", "text", 3)
     )
     assert _rows(doc_pairs.portable_shingle_sets(spark, sf_dir)) == _rows(
-        dedup._portable_shingle_sets(docs, "doc_id", "text", 3)
+        dedup._shingle_sets(docs, "doc_id", "text", 3, family=dedup.PORTABLE)
     )
 
 
