@@ -87,17 +87,20 @@ def upsert_evolve(
     target: DataFrame,
     updates: DataFrame,
     key_cols: Sequence[str],
+    preserve_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Schema-evolving upsert: Delta-style ``MERGE .. WITH SCHEMA
     EVOLUTION`` semantics on top of :func:`upsert`.
 
     The result carries the UNION schema (target columns first, then
     columns only the batch has). Columns the batch no longer sends
-    keep their old target value on matched rows (they behave exactly
-    like O8's ``preserve_cols``, because the widened batch carries
-    NULL there by construction); columns the batch introduces read
-    NULL on rows the batch didn't touch. Types for widened columns
-    come from the side that has them, so the evolution is lossless.
+    keep their old target value on matched rows (they join O8's
+    ``preserve_cols``, because the widened batch carries NULL there by
+    construction); columns the batch introduces read NULL on rows the
+    batch didn't touch. Types for widened columns come from the side
+    that has them, so the evolution is lossless. ``preserve_cols`` are
+    kept old-wins as in :func:`upsert`. A batch missing a key column
+    raises ``ValueError``.
 
     Same scale posture as :func:`upsert` — the widening is pure
     projection (no extra shuffle or scan)."""
@@ -114,7 +117,7 @@ def upsert_evolve(
     for c in stale_cols:
         updates = updates.withColumn(c, F.lit(None).cast(target.schema[c].dataType))
     updates = updates.select(*target.columns)
-    return upsert(target, updates, keys, preserve_cols=stale_cols)
+    return upsert(target, updates, keys, preserve_cols=[*preserve_cols, *stale_cols])
 
 
 def merge_conditional(
@@ -362,8 +365,8 @@ def apply_changes(
     Plan: one window over the changes (last-wins), one left-anti join to
     drop every touched key from the target, one union — the target is
     scanned once regardless of how many changes a key received. Pairs
-    with ``BucketedCowTable``/``VersionedCowTable`` for bucket-pruned
-    physical application.
+    with ``cow.VersionedCowTable`` for bucket-pruned physical
+    application.
     """
     from movie_data_etl_pipeline_spark.operators.dedup import dedup_last_wins
 

@@ -22,6 +22,7 @@ order-insensitively but exactly):
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -8608,237 +8609,9 @@ ORACLES: dict[str, str] = {
     # sim_embedding_near_dup; (no parquet twin): src_paged_api
 }
 
-# Round-3 wave 4 (drift/time-series/segmentation/graph monitoring
-# layer) lives in its own module to keep this file navigable.
-from movie_data_etl_pipeline_spark.plans import wave4 as _wave4  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave5 as _wave5  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave6 as _wave6  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave7 as _wave7  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave8 as _wave8  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave9 as _wave9  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave10 as _wave10  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave11 as _wave11  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave12 as _wave12  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave13 as _wave13  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave14 as _wave14  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave15 as _wave15  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave16 as _wave16  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave17 as _wave17  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave18 as _wave18  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave19 as _wave19  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave20 as _wave20  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave21 as _wave21  # noqa: E402
-from movie_data_etl_pipeline_spark.plans import wave22 as _wave22  # noqa: E402
-
-QUERIES.update(_wave4.QUERIES)
-ORACLES.update(_wave4.ORACLES)
-QUERIES.update(_wave5.QUERIES)
-ORACLES.update(_wave5.ORACLES)
-QUERIES.update(_wave6.QUERIES)
-ORACLES.update(_wave6.ORACLES)
-QUERIES.update(_wave7.QUERIES)
-ORACLES.update(_wave7.ORACLES)
-QUERIES.update(_wave8.QUERIES)
-ORACLES.update(_wave8.ORACLES)
-QUERIES.update(_wave9.QUERIES)
-ORACLES.update(_wave9.ORACLES)
-QUERIES.update(_wave10.QUERIES)
-ORACLES.update(_wave10.ORACLES)
-QUERIES.update(_wave11.QUERIES)
-ORACLES.update(_wave11.ORACLES)
-QUERIES.update(_wave12.QUERIES)
-ORACLES.update(_wave12.ORACLES)
-QUERIES.update(_wave13.QUERIES)
-ORACLES.update(_wave13.ORACLES)
-QUERIES.update(_wave14.QUERIES)
-ORACLES.update(_wave14.ORACLES)
-QUERIES.update(_wave15.QUERIES)
-ORACLES.update(_wave15.ORACLES)
-QUERIES.update(_wave16.QUERIES)
-ORACLES.update(_wave16.ORACLES)
-QUERIES.update(_wave17.QUERIES)
-ORACLES.update(_wave17.ORACLES)
-QUERIES.update(_wave18.QUERIES)
-ORACLES.update(_wave18.ORACLES)
-QUERIES.update(_wave19.QUERIES)
-ORACLES.update(_wave19.ORACLES)
-QUERIES.update(_wave20.QUERIES)
-ORACLES.update(_wave20.ORACLES)
-QUERIES.update(_wave21.QUERIES)
-ORACLES.update(_wave21.ORACLES)
-QUERIES.update(_wave22.QUERIES)
-ORACLES.update(_wave22.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave23 as _wave23  # noqa: E402
-
-QUERIES.update(_wave23.QUERIES)
-ORACLES.update(_wave23.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave24 as _wave24  # noqa: E402
-
-QUERIES.update(_wave24.QUERIES)
-ORACLES.update(_wave24.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave25 as _wave25  # noqa: E402
-
-QUERIES.update(_wave25.QUERIES)
-ORACLES.update(_wave25.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave26 as _wave26  # noqa: E402
-
-QUERIES.update(_wave26.QUERIES)
-ORACLES.update(_wave26.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave27 as _wave27  # noqa: E402
-
-QUERIES.update(_wave27.QUERIES)
-ORACLES.update(_wave27.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave28 as _wave28  # noqa: E402
-
-QUERIES.update(_wave28.QUERIES)
-ORACLES.update(_wave28.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave29 as _wave29  # noqa: E402
-
-QUERIES.update(_wave29.QUERIES)
-ORACLES.update(_wave29.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave30 as _wave30  # noqa: E402
-
-QUERIES.update(_wave30.QUERIES)
-ORACLES.update(_wave30.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave31 as _wave31  # noqa: E402
-
-QUERIES.update(_wave31.QUERIES)
-ORACLES.update(_wave31.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave32 as _wave32  # noqa: E402
-
-QUERIES.update(_wave32.QUERIES)
-ORACLES.update(_wave32.ORACLES)
-from movie_data_etl_pipeline_spark.plans import wave33 as _wave33  # noqa: E402
-
-QUERIES.update(_wave33.QUERIES)
-ORACLES.update(_wave33.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave34 as _wave34  # noqa: E402
-
-QUERIES.update(_wave34.QUERIES)
-ORACLES.update(_wave34.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave35 as _wave35  # noqa: E402
-
-QUERIES.update(_wave35.QUERIES)
-ORACLES.update(_wave35.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave36 as _wave36  # noqa: E402
-
-QUERIES.update(_wave36.QUERIES)
-ORACLES.update(_wave36.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave37 as _wave37  # noqa: E402
-
-QUERIES.update(_wave37.QUERIES)
-ORACLES.update(_wave37.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave38 as _wave38  # noqa: E402
-
-QUERIES.update(_wave38.QUERIES)
-ORACLES.update(_wave38.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave39 as _wave39  # noqa: E402
-
-QUERIES.update(_wave39.QUERIES)
-ORACLES.update(_wave39.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave40 as _wave40  # noqa: E402
-
-QUERIES.update(_wave40.QUERIES)
-ORACLES.update(_wave40.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave41 as _wave41  # noqa: E402
-
-QUERIES.update(_wave41.QUERIES)
-ORACLES.update(_wave41.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave42 as _wave42  # noqa: E402
-
-QUERIES.update(_wave42.QUERIES)
-ORACLES.update(_wave42.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave43 as _wave43  # noqa: E402
-
-QUERIES.update(_wave43.QUERIES)
-ORACLES.update(_wave43.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave44 as _wave44  # noqa: E402
-
-QUERIES.update(_wave44.QUERIES)
-ORACLES.update(_wave44.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave45 as _wave45  # noqa: E402
-
-QUERIES.update(_wave45.QUERIES)
-ORACLES.update(_wave45.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave46 as _wave46  # noqa: E402
-
-QUERIES.update(_wave46.QUERIES)
-ORACLES.update(_wave46.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave47 as _wave47  # noqa: E402
-
-QUERIES.update(_wave47.QUERIES)
-ORACLES.update(_wave47.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave48 as _wave48  # noqa: E402
-
-QUERIES.update(_wave48.QUERIES)
-ORACLES.update(_wave48.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave49 as _wave49  # noqa: E402
-
-QUERIES.update(_wave49.QUERIES)
-ORACLES.update(_wave49.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave50 as _wave50  # noqa: E402
-
-QUERIES.update(_wave50.QUERIES)
-ORACLES.update(_wave50.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave51 as _wave51  # noqa: E402
-
-QUERIES.update(_wave51.QUERIES)
-ORACLES.update(_wave51.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave52 as _wave52  # noqa: E402
-
-QUERIES.update(_wave52.QUERIES)
-ORACLES.update(_wave52.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave53 as _wave53  # noqa: E402
-
-QUERIES.update(_wave53.QUERIES)
-ORACLES.update(_wave53.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave54 as _wave54  # noqa: E402
-
-QUERIES.update(_wave54.QUERIES)
-ORACLES.update(_wave54.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave55 as _wave55  # noqa: E402
-
-QUERIES.update(_wave55.QUERIES)
-ORACLES.update(_wave55.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave56 as _wave56  # noqa: E402
-
-QUERIES.update(_wave56.QUERIES)
-ORACLES.update(_wave56.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave57 as _wave57  # noqa: E402
-
-QUERIES.update(_wave57.QUERIES)
-ORACLES.update(_wave57.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave58 as _wave58  # noqa: E402
-
-QUERIES.update(_wave58.QUERIES)
-ORACLES.update(_wave58.ORACLES)
-
-from movie_data_etl_pipeline_spark.plans import wave59 as _wave59  # noqa: E402
-
-QUERIES.update(_wave59.QUERIES)
-ORACLES.update(_wave59.ORACLES)
+# Waves 4-59 live in their own modules to keep this file navigable;
+# each adds its queries and oracles in build order.
+for _n in range(4, 60):
+    _wave = importlib.import_module(f"movie_data_etl_pipeline_spark.plans.wave{_n}")
+    QUERIES.update(_wave.QUERIES)
+    ORACLES.update(_wave.ORACLES)

@@ -14,7 +14,8 @@ Scale posture:
   micro-batch via ``foreachBatch``. Re-delivered batches (at-least-once
   sources, restarts) converge to the same table state because upsert is
   idempotent on the key — the same fixed-point property
-  ``test_merge.py`` pins for the batch operator.
+  ``test_merge.py`` pins for the batch operator. It runs in update
+  output mode, so it also takes a stateful aggregation's changed rows.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movie_data_etl_pipeline_spark.operators import merge
+from movie_data_etl_pipeline_spark.operators.dedup import dedup_last_wins
 
 
 def streaming_dedup(
@@ -55,6 +57,8 @@ def start_upsert_sink(
     the batch last-wins on ``order_col`` (a batch can carry several
     versions of one key), read the current target, ``merge.upsert``, and
     atomically swap via overwrite. Returns the started StreamingQuery.
+    A batch that cannot merge into the existing target (e.g. a narrower
+    schema) fails the query and leaves the target as it was.
 
     On a transactional table format (Delta/Iceberg) the body becomes a
     single ``MERGE INTO``; the read-modify-write here is the plain-
@@ -66,17 +70,13 @@ def start_upsert_sink(
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
-        from pyspark.sql.window import Window
-
-        rn = F.row_number().over(
-            Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        )
-        latest = batch.withColumn("__rn", rn).filter("__rn = 1").drop("__rn")
+        latest = dedup_last_wins(batch, keys, [F.desc(order_col)])
         try:
             target = spark.read.parquet(target_path)
-            new_state = merge.upsert(target, latest, keys)
         except AnalysisException:  # first batch: target does not exist yet
             new_state = latest
+        else:
+            new_state = merge.upsert(target, latest, keys)
         # materialize before overwriting the path being read
         new_state.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             target_path
@@ -85,6 +85,7 @@ def start_upsert_sink(
     return (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
         .start()
     )
 
@@ -123,8 +124,6 @@ def start_cdc_sink(
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
-        from movie_data_etl_pipeline_spark.operators.dedup import dedup_last_wins
-
         # op_col is the deterministic tiebreaker dedup_last_wins requires:
         # two same-key changes carrying an equal seq within one batch
         # resolve to the op that sorts last ("U" beats "D"), so replays
@@ -186,20 +185,16 @@ def start_versioned_upsert_sink(
     half-applied micro-batch — and replayed batches converge to the
     same table STATE (upsert idempotency) while each commit remains an
     auditable version. At 100 TB the per-batch write cost is the
-    touched buckets, not the table (the ``BucketedCowTable`` pruning
-    argument, now per micro-batch)."""
+    touched buckets, not the table (the pruning argument of
+    ``operators/cow``, now per micro-batch)."""
     keys = list(table.key_cols)
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
-        from pyspark.sql.window import Window
-
-        rn = F.row_number().over(
-            Window.partitionBy(*keys).orderBy(F.desc(order_col))
+        table.upsert(
+            batch.sparkSession, dedup_last_wins(batch, keys, [F.desc(order_col)])
         )
-        latest = batch.withColumn("__rn", rn).filter("__rn = 1").drop("__rn")
-        table.upsert(batch.sparkSession, latest)
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

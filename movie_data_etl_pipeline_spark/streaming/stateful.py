@@ -80,49 +80,6 @@ def batch_running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_upsert_to_parquet(
-    stream: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    key_cols: list[str],
-) -> "object":
-    """Streaming upsert sink: every micro-batch merges into a parquet
-    target with the engine's batch ``merge.upsert`` (anti-join/coalesce
-    read-modify-write), via ``foreachBatch``.
-
-    This is how the reference's ON CONFLICT load loop
-    (``/root/reference/02_etl.py:84-101``) looks when the source is a
-    stream instead of paginated REST calls: exactly-once *effect* comes
-    from upsert idempotency (a replayed batch is a fixed point) plus the
-    checkpointed source offsets. On a table format (Delta/Iceberg) the
-    body becomes MERGE INTO; the operator shape is identical.
-
-    Returns the started ``StreamingQuery`` (caller awaits/stops).
-    """
-    from movie_data_etl_pipeline_spark.operators.merge import upsert
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # latest-per-key within the batch, then merge into target state
-        deduped = batch_df.dropDuplicates(key_cols)
-        try:
-            target = spark.read.parquet(target_path)
-            merged = upsert(target, deduped, key_cols=key_cols)
-        except Exception:  # first batch: target doesn't exist yet
-            merged = deduped
-        # plain-parquet RMW needs a full-table localCheckpoint before the
-        # overwrite (the plan reads the files it is about to replace);
-        # a real deployment writes to a new snapshot dir or table format
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
 # transformWithStateInPandas (Spark 4.x) — the successor API: typed state
 # variables on a StatefulProcessor instead of one opaque tuple.

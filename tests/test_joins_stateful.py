@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from movie_data_etl_pipeline_spark.operators import joins, similarity
 from movie_data_etl_pipeline_spark.sources import load_table
+from movie_data_etl_pipeline_spark.streaming import ingest as SI
 from movie_data_etl_pipeline_spark.streaming import stateful as ST
 from movie_data_etl_pipeline_spark.streaming import windows as SW
 
@@ -118,7 +119,9 @@ def test_stream_upsert_sink_idempotent(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream = SW.read_events_stream(spark, sf_dir)
     totals = ST.streaming_running_user_totals(stream)
-    q = ST.stream_upsert_to_parquet(totals, target, ckpt, key_cols=["user_id"])
+    q = SI.start_upsert_sink(
+        totals, target, ["user_id"], order_col="last_ts", checkpoint_dir=ckpt
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -131,8 +134,12 @@ def test_stream_upsert_sink_idempotent(spark, sf_dir, tmp_path):
     assert g == w and len(g) > 0
     # restart from the checkpoint with no new data: a no-op, state unchanged
     stream2 = SW.read_events_stream(spark, sf_dir)
-    q2 = ST.stream_upsert_to_parquet(
-        ST.streaming_running_user_totals(stream2), target, ckpt, key_cols=["user_id"]
+    q2 = SI.start_upsert_sink(
+        ST.streaming_running_user_totals(stream2),
+        target,
+        ["user_id"],
+        order_col="last_ts",
+        checkpoint_dir=ckpt,
     )
     try:
         q2.processAllAvailable()

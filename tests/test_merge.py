@@ -111,7 +111,7 @@ def test_scd2_null_tracked_values_compare_null_safe(spark):
 def _cow_fixture(spark, tmp_path, n_buckets=16):
     """A 400-key table plus a batch that updates 12 keys, inserts 5, and
     (in the preserve variant) carries nulls to be back-filled."""
-    from movie_data_etl_pipeline_spark.operators.cow import BucketedCowTable
+    from movie_data_etl_pipeline_spark.operators.cow import VersionedCowTable
 
     target = spark.createDataFrame(
         [(i, f"old{i}", i * 10) for i in range(400)], SCHEMA
@@ -121,7 +121,7 @@ def _cow_fixture(spark, tmp_path, n_buckets=16):
         + [(400 + i, f"ins{i}", 7) for i in range(5)],
         SCHEMA,
     )
-    table = BucketedCowTable(str(tmp_path / "cow"), ["k"], n_buckets=n_buckets)
+    table = VersionedCowTable(str(tmp_path / "cow"), ["k"], n_buckets=n_buckets)
     table.init(target)
     return table, target, batch
 
@@ -167,7 +167,7 @@ def test_bucketed_cow_rewrites_only_touched_buckets(spark, tmp_path):
     assert 0 < len(touched) < table.n_buckets  # pruning has something to prune
 
     def snapshot(bucket):
-        d = os.path.join(table.path, f"_bucket={bucket}")
+        d = os.path.join(table.path, "v00001", f"_bucket_dir={bucket}")
         return {
             f: os.path.getmtime(os.path.join(d, f))
             for f in os.listdir(d)
@@ -193,6 +193,29 @@ def test_bucketed_cow_upsert_idempotent(spark, tmp_path):
 
 
 # ----------------------------------------- versioned (snapshot) CoW
+
+
+def test_versioned_cow_batch_missing_column_into_new_bucket_keeps_schema(
+    spark, tmp_path
+):
+    """A batch that lacks a table column and lands only in buckets the
+    table does not hold yet must not drop that column from the table:
+    the empty current slice is read under the manifest schema."""
+    from movie_data_etl_pipeline_spark.operators.cow import VersionedCowTable, bucket_of
+
+    t = VersionedCowTable(str(tmp_path / "vcow"), ["k"], n_buckets=16)
+    t.init(spark.createDataFrame([(0, "a", 10)], SCHEMA))
+    held = {int(b) for b in t.manifest()["buckets"]}
+    candidates = spark.createDataFrame([(k,) for k in range(1, 64)], "k INT")
+    new_k = next(
+        r["k"]
+        for r in candidates.select("k", bucket_of(["k"], 16).alias("b")).collect()
+        if r["b"] not in held
+    )
+    t.upsert(spark, spark.createDataFrame([(new_k, "b")], "k INT, v STRING"))
+    out = t.read(spark)
+    assert out.columns == ["k", "v", "runtime"]
+    assert _rows(out) == [(0, "a", 10), (new_k, "b", None)]
 
 
 def test_versioned_cow_upsert_matches_dataframe_backend(spark, tmp_path):

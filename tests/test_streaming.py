@@ -131,23 +131,23 @@ def test_streaming_dedup_drops_redeliveries(spark, sf_dir):
     assert len(got_ids) == len(set(got_ids)) == want
 
 
-def test_foreachbatch_upsert_sink_idempotent(spark, sf_dir, tmp_path):
+def _run_events_upsert_sink(stream, target: str, checkpoint: str) -> None:
     from movie_data_etl_pipeline_spark.streaming import ingest as SI
 
+    q = SI.start_upsert_sink(
+        stream, target, ["event_id"], order_col="ts", checkpoint_dir=checkpoint
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_foreachbatch_upsert_sink_idempotent(spark, sf_dir, tmp_path):
     target = str(tmp_path / "events_table")
 
     def run(checkpoint: str) -> None:
-        q = SI.start_upsert_sink(
-            SW.read_events_stream(spark, sf_dir),
-            target,
-            ["event_id"],
-            order_col="ts",
-            checkpoint_dir=checkpoint,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _run_events_upsert_sink(SW.read_events_stream(spark, sf_dir), target, checkpoint)
 
     run(str(tmp_path / "ckpt1"))
     events = load_table(spark, sf_dir, "events")
@@ -161,6 +161,24 @@ def test_foreachbatch_upsert_sink_idempotent(spark, sf_dir, tmp_path):
     run(str(tmp_path / "ckpt2"))
     rows2 = {tuple(r) for r in spark.read.parquet(target).collect()}
     assert rows2 == rows1
+
+
+def test_upsert_sink_failed_merge_keeps_target(spark, sf_dir, tmp_path):
+    """A micro-batch that cannot merge into the existing target (here a
+    narrower schema) fails the query; it must not replace the target
+    with the batch."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    target = str(tmp_path / "events_table")
+    _run_events_upsert_sink(
+        SW.read_events_stream(spark, sf_dir), target, str(tmp_path / "ckpt1")
+    )
+    before = sorted(map(tuple, spark.read.parquet(target).collect()))
+    narrow = SW.read_events_stream(spark, sf_dir).select("event_id", "ts")
+    with pytest.raises(StreamingQueryException):
+        _run_events_upsert_sink(narrow, target, str(tmp_path / "ckpt2"))
+    assert sorted(map(tuple, spark.read.parquet(target).collect())) == before
 
 
 def test_stream_static_enrich_matches_batch(spark, sf_dir):
