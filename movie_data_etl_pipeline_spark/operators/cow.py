@@ -16,7 +16,12 @@ nothing but Spark + Parquet:
   buckets; the merge READS only those bucket directories and WRITES
   only those, under a fresh version directory;
 * untouched bucket directories are never opened, never rewritten:
-  cost is O(touched fraction of target), exactly like a format MERGE.
+  cost is O(touched fraction of target), exactly like a format MERGE;
+* every commit evaluates its input exactly ONCE and learns the touched
+  bucket set from that same job (a ``collect_set`` observation riding
+  on it), so the manifest names exactly the bucket directories the
+  commit wrote — consistent by construction, even when the input is
+  nondeterministic or its source changes between two scans.
 
 Trade-offs vs a real table format, stated honestly: there is no
 multi-writer coordination, and the batch must be small relative to the
@@ -30,7 +35,7 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -55,8 +60,24 @@ def bucket_of(key_cols: Sequence[str], n_buckets: int):
 def _buckets_in(df: DataFrame) -> list[int]:
     """Sorted distinct bucket ids of ``df`` — a driver-side collect
     BOUNDED by ``n_buckets`` ints (not by data size), the same class of
-    driver fetch as a partition-pruning predicate."""
+    driver fetch as a partition-pruning predicate. It runs ``df`` as a
+    job of its own, so it only probes what a commit will NOT write (the
+    predicate of :meth:`VersionedCowTable.delete_where`); the bucket set
+    of written rows comes from :func:`_observe_buckets` on the write's
+    own evaluation, never from a second one."""
     return sorted(r[0] for r in df.select(BUCKET_COL).distinct().collect())
+
+
+def _observe_buckets(df: DataFrame):
+    """``df`` with a ``collect_set(_bucket)`` observation attached, and a
+    callable returning its sorted bucket ids once ``df`` has run (a
+    ``localCheckpoint`` or a write). The set is gathered by the same job
+    that materializes the rows — at most ``n_buckets`` ints, the same
+    bound as :func:`_buckets_in` — and a task attempt merged twice adds
+    nothing to a set."""
+    obs = Observation()
+    observed = df.observe(obs, F.collect_set(BUCKET_COL).alias(BUCKET_COL))
+    return observed, lambda: sorted(obs.get[BUCKET_COL])
 
 
 class VersionedCowTable:
@@ -157,11 +178,11 @@ class VersionedCowTable:
 
     def init(self, df: DataFrame) -> None:
         os.makedirs(self.path, exist_ok=True)
-        with_bucket = df.withColumn(BUCKET_COL, bucket_of(self.key_cols, self.n_buckets))
-        self._write_version(with_bucket, 1)
-        self._commit(
-            {b: 1 for b in _buckets_in(with_bucket)}, 1, with_bucket.schema.json()
+        with_bucket, written = _observe_buckets(
+            df.withColumn(BUCKET_COL, bucket_of(self.key_cols, self.n_buckets))
         )
+        self._write_version(with_bucket, 1)
+        self._commit({b: 1 for b in written()}, 1, with_bucket.schema.json())
 
     def _read_raw(
         self, spark: SparkSession, m: dict, buckets: Sequence[int] | None = None
@@ -202,18 +223,29 @@ class VersionedCowTable:
         """Pruned read-modify-write committed as a new snapshot: read
         ONLY the buckets the batch touches, apply ``combine(current_slice,
         batch)``, and write the result as those buckets' new version.
-        Returns the new version (the current one if the batch is empty)."""
+        Returns the new version (the current one if the batch is empty).
+
+        The batch is evaluated ONCE: one ``localCheckpoint`` job both
+        materializes it and observes its bucket set, and the merge reads
+        that checkpoint. The touched set and the written rows therefore
+        come from the same evaluation, so the manifest can only point at
+        bucket directories this commit wrote, and no batch row can land
+        outside them — whatever the batch's upstream plan does when run
+        again."""
         m = self.manifest()
         new_version = self._next_version(m["version"])
-        batch_b = batch.withColumn(BUCKET_COL, bucket_of(self.key_cols, self.n_buckets))
-        touched = _buckets_in(batch_b)
+        batch_b, batch_buckets = _observe_buckets(
+            batch.withColumn(BUCKET_COL, bucket_of(self.key_cols, self.n_buckets))
+        )
+        batch_b = batch_b.localCheckpoint()
+        touched = batch_buckets()
         if not touched:
             return m["version"]
         buckets = {int(b): v for b, v in m["buckets"].items()}
         # buckets the table does not hold yet read as an empty slice under
         # the manifest schema, so the snapshot keeps every table column
         current = self._read_raw(spark, m, [b for b in touched if b in buckets])
-        merged = combine(current, batch_b).localCheckpoint()
+        merged = combine(current, batch_b)
         self._write_version(merged, new_version)
         buckets.update((b, new_version) for b in touched)
         self._commit(buckets, new_version, merged.schema.json(), publish)
@@ -306,14 +338,14 @@ class VersionedCowTable:
         if not touched:
             return m["version"]
         new_version = self._next_version(m["version"])
-        survivors = (
-            self._read_raw(spark, m, touched)
-            .where(~F.coalesce(predicate, F.lit(False)))  # NULL predicate = keep
-            .localCheckpoint()
+        survivors, kept_buckets = _observe_buckets(
+            self._read_raw(spark, m, touched).where(
+                ~F.coalesce(predicate, F.lit(False))  # NULL predicate = keep
+            )
         )
         self._write_version(survivors, new_version)
         buckets = {int(b): v for b, v in m["buckets"].items()}
-        kept = set(_buckets_in(survivors))
+        kept = set(kept_buckets())
         for b in touched:
             if b in kept:
                 buckets[b] = new_version

@@ -78,62 +78,3 @@ def batch_running_user_totals(events: DataFrame) -> DataFrame:
         F.sum("value").alias("total_value"),
         F.max("ts").alias("last_ts"),
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4.x) — the successor API: typed state
-# variables on a StatefulProcessor instead of one opaque tuple.
-# ---------------------------------------------------------------------------
-
-
-def streaming_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """Modern twin of ``streaming_running_user_totals`` on the
-    ``transformWithStateInPandas`` API: per-user cumulative totals kept
-    in a typed ValueState. Compared to ``applyInPandasWithState`` the
-    processor owns named state variables (here one; a real profile
-    would add ListState/MapState and TTL), and the same replay
-    guarantee holds: state shards by the groupBy hash, Arrow batches
-    fold vectorized.
-
-    Runtime requirement: the TWS state-server protocol needs
-    ``google.protobuf`` in the Python workers (its driver worker
-    crashes without it); environments lacking protobuf should use
-    ``streaming_running_user_totals`` (applyInPandasWithState), which
-    has no such dependency — the test suite skips accordingly."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n long, total double, last_us long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            n, total, last_us = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    batch_max = int(pdf["ts"].astype("int64").max())
-                    last_us = max(last_us, batch_max // 1000)
-            self._state.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [pd.Timestamp(last_us * 1000)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        UserTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

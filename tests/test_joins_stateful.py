@@ -150,37 +150,3 @@ def test_stream_upsert_sink_idempotent(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(target).collect()
     }
     assert again == w
-
-
-def test_transform_with_state_equals_batch(spark, sf_dir):
-    """The transformWithStateInPandas twin must fold a bounded stream to
-    the same per-user totals as the batch aggregation (same contract as
-    the applyInPandasWithState test above, on the successor API).
-
-    Requires protobuf (the TWS state-server protocol); skipped where the
-    interpreter lacks it — the operator itself is import-clean."""
-    import pytest
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas needs google.protobuf at runtime")
-    stream = SW.read_events_stream(spark, sf_dir)
-    streamed = SW.run_stream_to_memory(
-        spark, ST.streaming_user_totals_tws(stream), "t_tws", output_mode="update"
-    )
-    final = streamed.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("total_value").alias("total_value"),
-        F.max("last_ts").alias("last_ts"),
-    )
-    expected = ST.batch_running_user_totals(load_table(spark, sf_dir, "events"))
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 4), r["last_ts"])
-        for r in final.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 4), r["last_ts"])
-        for r in expected.collect()
-    }
-    assert got == want and len(got) > 0

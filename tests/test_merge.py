@@ -601,3 +601,74 @@ def test_versioned_cow_write_audit_publish(spark, tmp_path):
     nxt = t.upsert(spark, spark.createDataFrame([(5, "e")], "k int, v string"))
     assert nxt > staged
     assert {tuple(r) for r in t.read(spark).collect()} == staged_rows | {(5, "e")}
+
+
+def _random_key_batch(spark, n, calls=None):
+    """``n`` rows keyed by a nondeterministic Python UDF: every
+    evaluation of the batch draws different keys (and so different
+    buckets); ``calls``, an accumulator, counts the UDF's evaluations."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    def key(i):
+        if calls is not None:
+            calls.add(1)
+        return f"{i}-{random.random()}"
+
+    rand_key = F.udf(key, "string").asNondeterministic()
+    return spark.range(n).select(
+        rand_key("id").alias("k"), F.col("id").cast("string").alias("v")
+    )
+
+
+def test_versioned_cow_nondeterministic_batch_commits_what_it_wrote(spark, tmp_path):
+    """The manifest's touched buckets and the written rows must come from
+    ONE evaluation of the batch: with keys that change on every
+    evaluation, a second scan for the bucket set would name directories
+    the write never produced and drop rows written outside that set."""
+    import os
+
+    from movie_data_etl_pipeline_spark.operators.cow import VersionedCowTable
+
+    t = VersionedCowTable(str(tmp_path / "vcow"), ["k"], n_buckets=64)
+    t.init(spark.createDataFrame([(f"a{i}", "x") for i in range(10)], "k string, v string"))
+    t.upsert(spark, _random_key_batch(spark, 20))
+    assert t.read(spark).count() == 30
+    dirs = t._bucket_dirs(t.manifest())
+    assert len(dirs) == len(t.manifest()["buckets"])
+    assert [d for d in dirs if not os.path.isdir(d)] == []
+
+
+def test_versioned_cow_upsert_evaluates_batch_once(spark, tmp_path):
+    """One commit runs the batch's upstream plan exactly once: the
+    touched-bucket set is observed on the batch's single
+    materialization, which the merge then reads."""
+    from movie_data_etl_pipeline_spark.operators.cow import VersionedCowTable
+
+    t = VersionedCowTable(str(tmp_path / "vcow"), ["k"], n_buckets=16)
+    t.init(spark.createDataFrame([("a", "x")], "k string, v string"))
+    for _ in range(2):
+        calls = spark.sparkContext.accumulator(0)
+        t.upsert(spark, _random_key_batch(spark, 20, calls))
+        assert calls.value == 20
+
+
+def test_versioned_cow_empty_batch_commits_nothing(spark, tmp_path):
+    """An empty batch is a no-op for both merge flavours: the current
+    version comes back, and no manifest, version directory or pointer
+    move is written."""
+    import os
+
+    from movie_data_etl_pipeline_spark.operators.cow import VersionedCowTable
+
+    t = VersionedCowTable(str(tmp_path / "vcow"), ["k"], n_buckets=4)
+    t.init(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    head = t.latest_version()
+    before = sorted(os.listdir(t.path))
+    empty = spark.createDataFrame([], "k int, v string")
+    assert t.upsert(spark, empty) == head
+    assert t.insert_if_absent(spark, empty.where("k > 0")) == head
+    assert t.latest_version() == head
+    assert sorted(os.listdir(t.path)) == before
+    assert _rows(t.read(spark)) == [(1, "a"), (2, "b")]
