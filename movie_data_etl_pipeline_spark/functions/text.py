@@ -127,15 +127,3 @@ def fingerprint(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")))
 
-
-def rolling_hash(text: Column | str, window: int = 8) -> Column:
-    """Array of xxhash64 values over character n-gram windows — the
-    fingerprint stream used by content-defined chunking. Codegen'd
-    array expression (sequence + substring + hash)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.when(F.length(c) < window, F.array().cast("array<bigint>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - (window - 1)),
-            lambda i: F.xxhash64(F.substring(c, i, window)),
-        )
-    )

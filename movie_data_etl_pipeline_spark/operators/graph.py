@@ -107,26 +107,6 @@ def pagerank_fixed_point(
     return ranks
 
 
-def cotransaction_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """Bidirectional customer↔supplier edge list from the order graph:
-    a distinct (customer, supplier) pair exists when any lineitem of the
-    customer's order was supplied by that supplier. Customers map to
-    even node ids (2k), suppliers to odd (2k+1), so one int64 node space
-    holds both sides collision-free."""
-    pairs = (
-        orders.select("o_orderkey", "o_custkey")
-        .join(lineitem.select("l_orderkey", "l_suppkey"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            (F.col("o_custkey") * 2).alias("c_node"),
-            (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-        )
-        .distinct()
-    )
-    return pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst")).unionByName(
-        pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
-    )
-
-
 def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,

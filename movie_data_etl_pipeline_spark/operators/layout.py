@@ -116,77 +116,6 @@ def zorder_layout(
     return out.sortWithinPartitions("_zvalue")
 
 
-# --------------------------------------------------------------------
-# N-dimensional generalization
-# --------------------------------------------------------------------
-
-
-def scale_bits(c: Column, lo, hi, bits: int) -> Column:
-    """``scale16`` generalized: affine-map ``[lo, hi]`` onto
-    ``[0, 2^bits - 1]``."""
-    top = (1 << bits) - 1
-    if float(hi) <= float(lo):
-        return F.lit(0).cast("bigint")
-    scaled = F.floor(
-        (c.cast("double") - F.lit(float(lo)))
-        / (F.lit(float(hi)) - F.lit(float(lo)))
-        * F.lit(float(top))
-    )
-    return F.coalesce(
-        F.least(F.greatest(scaled, F.lit(0)), F.lit(top)), F.lit(0)
-    ).cast("bigint")
-
-
-def zvalue_n(cols: list[Column], bits_per_col: int) -> Column:
-    """Morton code over N columns: bit ``b`` of column ``i`` lands at
-    output position ``b*N + i``. Inputs must already be in
-    ``[0, 2^bits_per_col)`` (use ``scale_bits``); ``N * bits_per_col``
-    must stay ≤ 63 (bigint). The expression is an explicit
-    shift/and/or sum — ``N*bits`` codegen'd integer terms, no Python;
-    the 2-column case keeps the cheaper magic-mask ``zvalue16``.
-    """
-    n = len(cols)
-    if n * bits_per_col > 63:
-        raise ValueError("code wider than 63 bits")
-    out = F.lit(0).cast("bigint")
-    for i, c in enumerate(cols):
-        v = c.cast("bigint")
-        for b in range(bits_per_col):
-            bit = F.shiftright(v, b).bitwiseAND(F.lit(1))
-            out = out.bitwiseOR(F.shiftleft(bit, b * n + i))
-    return out
-
-
-def zorder_layout_n(
-    df: DataFrame, cols: list[str], num_partitions: int | None = None
-) -> DataFrame:
-    """``zorder_layout`` for ANY number of numeric cluster keys: one
-    bounds aggregate, per-column affine scaling into ``floor(63/N)``
-    bits (21 bits/key at N=3, 15 at N=4), N-way interleave, range
-    partition + in-partition sort. The layout analogue of the
-    reference's FULL btree index set (``sql/01_schema.sql:62-65``) at
-    once: every output file is a tight hyper-rectangle, so min/max
-    stats prune on ANY of the keys."""
-    bits = 63 // len(cols)
-    bounds = df.agg(
-        *[f for c in cols for f in (
-            F.min(F.col(c).cast("double")).alias(f"lo_{c}"),
-            F.max(F.col(c).cast("double")).alias(f"hi_{c}"),
-        )]
-    ).first()
-    if bounds[0] is None:
-        return df.withColumn("_zvalue", F.lit(0).cast("bigint"))
-    scaled = [
-        scale_bits(F.col(c), bounds[f"lo_{c}"], bounds[f"hi_{c}"], bits) for c in cols
-    ]
-    out = df.withColumn("_zvalue", zvalue_n(scaled, bits))
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions, "_zvalue")
-    else:
-        out = out.repartitionByRange("_zvalue")
-    return out.sortWithinPartitions("_zvalue")
-
-
 def compaction_plan(
     manifest: DataFrame,
     file_col: str = "file_id",

@@ -152,41 +152,6 @@ def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: Arrow-batched ``mapInPandas`` that rewrites the
-    payload to the target decoded-size budget (``width·height·3``
-    bytes, deterministic truncate/pad stand-in — a real deployment
-    swaps in the Pillow kernel of ``decode_real``) and updates the
-    metadata struct so downstream size accounting stays truthful."""
-    target = width * height * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p in pdf["payload"]:
-                if p is None:
-                    out.append(None)
-                else:
-                    b = bytes(p)
-                    out.append((b * (target // max(len(b), 1) + 1))[:target])
-            meta = []
-            for i, m in enumerate(pdf["meta"]):
-                if m is None:
-                    meta.append(None)
-                    continue
-                # Arrow hands struct columns to pandas as plain dicts
-                updated = dict(m)
-                updated["width"] = width
-                updated["height"] = height
-                updated["size_bytes"] = target if out[i] is not None else None
-                meta.append(updated)
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "payload": out, "meta": meta}
-            )
-
-    return assets.mapInPandas(run, schema=ASSET_SCHEMA)
-
-
 def asset_stats(assets: DataFrame) -> DataFrame:
     """Per-media-type size profile — pure columnar exprs over the
     metadata struct (no decode needed): the cheap-scan path a curation

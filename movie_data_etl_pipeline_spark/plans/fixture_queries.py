@@ -1323,13 +1323,18 @@ def sim_knn_lsh(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sim_knn_portable(spark: SparkSession, sf: str) -> DataFrame:
-    """Hyperplane LSH top-5 with engine-portable arithmetic: Rademacher
-    sign planes + int64-quantized dot products (``similarity.
-    knn_hyperplane_portable``) — same multi-table bucket-join plan as
-    ``sim_knn_lsh`` but with a full value-checked DuckDB oracle (which
-    candidate pairs collide AND their exact integer scores)."""
+    """Hyperplane LSH top-5 with engine-portable arithmetic: ``similarity.
+    knn_lsh`` under the ``PORTABLE`` plane family (Rademacher sign planes
+    + int64-quantized dot products) — the plan of ``sim_knn_lsh`` but
+    with a full value-checked DuckDB oracle (which candidate pairs
+    collide AND their exact integer scores)."""
     emb = load_table(spark, sf, "embeddings")
-    return similarity.knn_hyperplane_portable(emb, dim=64, k=5, n_planes=32, n_tables=4)
+    out = similarity.knn_lsh(
+        emb, dim=64, k=5, n_planes=8, n_tables=4, family=similarity.PORTABLE
+    )
+    return out.select(
+        "query_id", "neighbor_id", F.col("score").alias("qdot"), F.col("rank").alias("nn_rank")
+    )
 
 
 _SIM_KNN_PORT_SQL = f"""

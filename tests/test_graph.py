@@ -56,22 +56,6 @@ def test_dangling_node_receives_only_teleport(spark):
     assert out[2] > base
 
 
-def test_cotransaction_edges_bidirectional_and_disjoint_ids(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    e = graph.cotransaction_edges(orders, li)
-    n = e.count()
-    assert n > 0 and n % 2 == 0
-    # even ids only on the customer side, odd only on the supplier side
-    from pyspark.sql import functions as F
-
-    bad = e.filter(
-        ((F.col("src") % 2 == 0) & (F.col("dst") % 2 == 0))
-        | ((F.col("src") % 2 == 1) & (F.col("dst") % 2 == 1))
-    ).count()
-    assert bad == 0
-
-
 def _seeds(spark, rows):
     return spark.createDataFrame(rows, "node LONG, label STRING")
 

@@ -196,42 +196,3 @@ def test_zorder_layout_keys_above_16_bits(spark):
     # and distinct raw keys must not collapse onto one curve cell
     n_cells = out.select("_zvalue").distinct().count()
     assert n_cells > 512, n_cells
-
-
-def test_zvalue_n_matches_2d_interleave_and_bounds_3d(spark):
-    """The generic N-way interleave must agree with the magic-mask
-    zvalue16 on 2 columns, and cluster all three dimensions at N=3."""
-    import itertools
-
-    df = spark.createDataFrame([(1, 0), (0, 1), (3, 3), (0xFFFF, 0)], "x INT, y INT")
-    generic = [
-        r[0]
-        for r in df.select(
-            layout.zvalue_n([F.col("x"), F.col("y")], 16)
-        ).collect()
-    ]
-    magic = [r[0] for r in df.select(layout.zvalue16(F.col("x"), F.col("y"))).collect()]
-    assert generic == magic
-
-    pts = [
-        (x * 1000 + 7, y * 500 + 3, z * 250 + 1)
-        for x, y, z in itertools.product(range(8), range(8), range(8))
-    ]
-    df3 = spark.createDataFrame(pts, "x LONG, y LONG, z LONG")
-    out = layout.zorder_layout_n(df3, ["x", "y", "z"], num_partitions=8)
-    stats = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(
-            ((F.max("x") - F.min("x")) / 1000).alias("xr"),
-            ((F.max("y") - F.min("y")) / 500).alias("yr"),
-            ((F.max("z") - F.min("z")) / 250).alias("zr"),
-        )
-        .collect()
-    )
-    # 512 points in 8 partitions: every dimension's average extent must
-    # be well under the full 0..7 range (a 1-D sort leaves two of the
-    # three dimensions at full extent everywhere)
-    for dim in ("xr", "yr", "zr"):
-        avg = sum(r[dim] for r in stats) / len(stats)
-        assert avg < 6, (dim, avg)

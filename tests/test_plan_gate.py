@@ -197,7 +197,7 @@ def plans(spark, sf_dir):
 #    runtime flip closed by layer 1.
 #  * plans/wave36 _cf_pair_counts basket self-join (rc_item_item_cf /
 #    rc_assoc_rules) — narrow int64 (c, p), unbounded pairs; layer 1.
-#  * similarity.knn_lsh / knn_hyperplane_portable bucket self-joins,
+#  * similarity.knn_lsh bucket self-join (both plane families),
 #    knn_ivf posting join — the join relations CARRY the embedding
 #    vectors: float arrays are near-incompressible, so compressed ≈
 #    deserialized and the heuristic is not lying; additionally closed

@@ -139,13 +139,37 @@ def test_knn_portable_ranks_by_exact_integer_dot(spark, sf_dir):
     integer dot product (desc) with neighbor-id tie-break — i.e. the
     re-rank stage is exact even though candidate recall is approximate."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = similarity.knn_hyperplane_portable(emb, dim=64, k=5).collect()
+    out = similarity.knn_lsh(
+        emb, dim=64, k=5, n_planes=8, n_tables=4, family=similarity.PORTABLE
+    ).collect()
     by_q: dict[int, list] = {}
     for r in out:
         by_q.setdefault(r["query_id"], []).append(r)
     assert by_q
     for rows in by_q.values():
-        rows.sort(key=lambda r: r["nn_rank"])
-        ranked = [(-r["qdot"], r["neighbor_id"]) for r in rows]
+        rows.sort(key=lambda r: r["rank"])
+        ranked = [(-r["score"], r["neighbor_id"]) for r in rows]
         assert ranked == sorted(ranked)
-        assert [r["nn_rank"] for r in rows] == list(range(1, len(rows) + 1))
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+
+
+@pytest.mark.parametrize("qname", ["sim_knn_portable", "emb_random_projection"])
+def test_quantize_is_a_column_below_the_exchange(spark, sf_dir, qname):
+    """The 2^20 quantize must reach the Rademacher plane-dot fold as a
+    column projected under the input ``Repartition``. Computed in the
+    fold's own projection, Catalyst inlines the ``transform`` into the
+    n_planes·dim lambda and re-runs it per element (``sim_knn_portable``
+    measured ~1.8x slower)."""
+    lines = (
+        FQ.QUERIES[qname](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    ).splitlines()
+    # the plane-dot fold is the aggregate over rademacher_sign's shifts
+    folds = [ln for ln in lines if "aggregate(" in ln and "shiftright(" in ln]
+    assert folds
+    assert not any("FLOOR(" in ln for ln in folds)
+    # the tree prints top-down: the quantize Project sits below the
+    # exchange (a persisted relation prints its physical plan)
+    rep = next(
+        i for i, ln in enumerate(lines) if "Repartition" in ln or "RoundRobinPartitioning" in ln
+    )
+    assert any("Project" in ln and "FLOOR(" in ln for ln in lines[rep + 1:])

@@ -55,12 +55,6 @@ def test_lang_id_markers(spark):
     assert _one(spark, TX.lang_id(F.lit("这是中文"))) == "zh"
 
 
-def test_rolling_hash_window(spark):
-    out = _one(spark, TX.rolling_hash(F.lit("abcdefghij"), 8))
-    assert len(out) == 3  # 10 - 8 + 1
-    assert _one(spark, TX.rolling_hash(F.lit("short"), 8)) == []
-
-
 def test_stratified_sample_exact_quota_and_determinism(spark, sf_dir):
     from movie_data_etl_pipeline_spark.operators.topn import stratified_sample_exact
     from movie_data_etl_pipeline_spark.sources import load_table
